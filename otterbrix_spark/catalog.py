@@ -29,6 +29,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from otterbrix_spark.dialect import _scan_balanced, _split_top_level
 from otterbrix_spark.operators.dml import (
     ManagedTable,
     MaterializedView,
@@ -446,68 +447,10 @@ def _values_explicit_identity(
     return sorted(bad)
 
 
-def _split_top_level(text: str) -> list[str]:
-    """Split on commas not nested in (), [], <> or quotes (column-def
-    lists). Angle brackets only count OUTSIDE parens: a generic type
-    (`struct<a:int, b:int>`) sits at paren depth 0 in a column list,
-    while `<` as a comparison only occurs inside CHECK(...) parens."""
-    parts, cur, depth, angle, in_str = [], "", 0, 0, False
-    for ch in text:
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif depth == 0 and ch == "<" and (
-                angle > 0
-                or re.search(
-                    r"(?:^|[^A-Za-z0-9_])(?:struct|array|map)\s*$",
-                    cur,
-                    re.IGNORECASE,
-                )
-            ):
-                # only a generic-type head opens an angle group — a bare
-                # depth-0 comparison ('a < b') must not suppress splitting
-                angle += 1
-            elif depth == 0 and ch == ">" and angle > 0:
-                angle -= 1
-            if ch == "," and depth == 0 and angle == 0:
-                parts.append(cur)
-                cur = ""
-                continue
-        cur += ch
-    if cur.strip():
-        parts.append(cur)
-    return parts
-
-
 def _split_set_list(set_clause: str) -> dict[str, str]:
     """Split 'a = expr1, b = expr2' respecting parens and quotes."""
-    parts: list[str] = []
-    depth = 0
-    in_str = False
-    cur = ""
-    for ch in set_clause:
-        if ch == "'" and not in_str:
-            in_str = True
-        elif ch == "'" and in_str:
-            in_str = False
-        if not in_str:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append(cur)
-                cur = ""
-                continue
-        cur += ch
-    if cur.strip():
-        parts.append(cur)
     out = {}
-    for p in parts:
+    for p in _split_top_level(set_clause):
         # PG row-form assignment: SET (a, b) = (e1, e2) — one paren-
         # protected piece; expand pairwise (the subquery form
         # `= (SELECT ...)` is refused loudly, not mis-parsed)
@@ -622,36 +565,6 @@ _DML_TARGET = re.compile(
     re.IGNORECASE,
 )
 _CTE_SEP = re.compile(r"\s*,")
-
-
-def _scan_balanced(text: str, i: int) -> int:
-    """``text[i]`` is '('; return the index just past its matching ')',
-    skipping single-quoted strings (with '' escapes) and double-quoted
-    identifiers."""
-    depth, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if text[i] == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == '"':
-            i += 1
-            while i < n and text[i] != '"':
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in WITH clause")
 
 
 def _parse_with_clauses(sql: str):
@@ -1318,22 +1231,16 @@ class Catalog:
         }
         if not doms or "::" not in body:
             return body
-        names = "|".join(
-            re.escape(n) for n in sorted(doms, key=len, reverse=True)
-        )
-        op_re = re.compile(rf"::\s*({names})\b", re.IGNORECASE)
-        if not op_re.search(body):
+        names = "|".join(re.escape(n) for n in doms)
+        if not re.search(rf"::\s*(?:{names})\b", body, re.IGNORECASE):
             return body
-        from otterbrix_spark.dialect import (
-            _apply_binop_scanned, _protect_strings, _restore_strings,
-        )
+        from otterbrix_spark.dialect_ast import rewrite_casts
 
-        prot, lits = _protect_strings(body)
-
-        def lower_cast(lhs: str, d: str) -> str | None:
-            if not lhs:
+        def lower_cast(lhs: str, type_text: str) -> str | None:
+            d = type_text.lower()
+            t = doms.get(d)
+            if t is None:
                 return None
-            t = doms[d]
             base = _pg_type_to_ddl(t["base"], self.types)
             cast = f"CAST({lhs} AS {base})"
             conds = [
@@ -1350,23 +1257,7 @@ class Catalog:
                 f"ELSE CAST(raise_error('{msg}') AS {base}) END)"
             )
 
-        prot = _apply_binop_scanned(
-            prot, op_re, lambda lhs, m: lower_cast(lhs, m.group(1).lower())
-        )
-        # the shared operand scanner recognizes identifiers / calls /
-        # paren groups / stashed literals — a bare NUMERIC literal LHS
-        # (5::posint) needs its own backward match
-        num_re = re.compile(
-            rf"(?<![\w.\x00])(\d+(?:\.\d+)?)\s*::\s*({names})\b",
-            re.IGNORECASE,
-        )
-        while True:
-            mm = num_re.search(prot)
-            if mm is None:
-                break
-            repl = lower_cast(mm.group(1), mm.group(2).lower())
-            prot = prot[: mm.start()] + (repl or mm.group(1)) + prot[mm.end():]
-        return _restore_strings(prot, lits)
+        return rewrite_casts(body, lower_cast)
 
     def implicit_commit_temp_sweep(self, statement: str) -> None:
         """PG autocommit parity for ON COMMIT DELETE ROWS (ADVICE r12):

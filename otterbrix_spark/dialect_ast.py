@@ -1,32 +1,29 @@
-"""Tokenizer/AST-based PG-dialect rewriter — the structured twin of
-``otterbrix_spark.dialect`` (VERDICT r3/r4 ask: retire the regex layer's
-silent-misparse risk with a parse-tree pass; sqlglot is not available in
+"""Tokenizer/AST-based PG-dialect rewriter — the operator-fold half of
+``dialect.rewrite`` (the one runtime path; sqlglot is not available in
 this environment, so this is a self-contained tokenizer + operand folder).
 
-Same lowering semantics as the regex path (it reuses ``_delete_expr`` /
-``_json_path`` / ``_NUM_OR_INTERVAL`` / the keyword tables), but built on a
-real SQL lexer:
+Built on a real SQL lexer:
 
   - string literals, double-quoted identifiers, line and block comments are
     LEXED, not regex-stashed — operators inside any of them can never fire;
   - operands are parsed structurally (identifier / call with balanced
     argument list / parenthesized group / ARRAY[..] / ROW(..) / literal),
-    so arbitrarily nested calls work as operator LHS without the
-    balanced-paren back-scanning the regex path needs;
+    so arbitrarily nested calls work as operator LHS;
   - PG operators fold LEFT-ASSOCIATIVELY over the parsed operand, exactly
     PG's associativity for ``a -> 'x' ->> 'y'`` chains;
   - everything that is not a PG construct is re-emitted byte-identical
     (tokens carry their leading whitespace/comments), so plain Spark SQL
     passes through untouched.
 
+The same operand parser lowers the catalog's ``expr::domain`` casts
+(:func:`rewrite_casts`) with a cast-only fold. Each operator fold has one
+case in the directed corpus of ``tests/test_dialect_ast.py``, which
+compares this module against an independent, test-only regex oracle.
+
 Reference anchor: the reference's real parser/transformer pipeline
 (`components/sql/parser/gram.y`, `components/sql/transformer/impl/
 transform_select.cpp:641-736`) — this module is the analogous
 parse-then-lower seam for the Spark build.
-
-Selected via ``OTTERBRIX_DIALECT_MODE=ast`` (see ``dialect.rewrite``) or by
-calling :func:`rewrite_ast` directly. The property suite asserts the two
-paths agree on the shared corpus (`tests/test_dialect_ast.py`).
 """
 
 from __future__ import annotations
@@ -43,18 +40,7 @@ from otterbrix_spark.dialect import (
     _lit_text,
     _protect_strings,
     _restore_strings,
-    _rewrite_date_bin,
-    _rewrite_extract_pg,
-    _rewrite_fetch,
-    _rewrite_filter_over,
-    _rewrite_generate_series,
-    _rewrite_order_using,
-    _rewrite_ordered_agg,
-    _rewrite_between_symmetric,
-    _rewrite_overlaps,
-    _rewrite_qualify,
-    _rewrite_select_into,
-    _rewrite_similar_to,
+    _rewrite_clauses,
 )
 
 # ---------------------------------------------------------------------------
@@ -154,23 +140,28 @@ def _emit_verbatim(toks: list[_Tok], start: int, end: int) -> str:
     return "".join(parts)
 
 
-def _parse_operand(toks: list[_Tok], i: int, end: int):
+def _parse_operand(toks: list[_Tok], i: int, end: int, fold=None):
     """Parse one operand starting at ``i`` (bounded by ``end``). Returns
     ``(text, next_index, kind, head_ident)`` or ``None`` when tokens[i]
-    cannot start an operand (keywords, operators, unbalanced groups)."""
+    cannot start an operand (keywords, operators, unbalanced groups).
+    Nested groups are rewritten with ``fold`` (default: the PG folds)."""
     t = toks[i]
     if t.kind == IDENT:
         up = t.text.upper()
         if up in _SQL_KEYWORDS:
-            return None
+            # NULL/TRUE/FALSE are operands to a cast-only fold; no PG
+            # operator takes a keyword LHS
+            if fold is None or up not in ("NULL", "TRUE", "FALSE"):
+                return None
+            return t.text, i + 1, _K_LIT, None
         nxt = toks[i + 1] if i + 1 < end else None
         if up == "ARRAY" and nxt is not None and nxt.text == "[":
             close = _match_close(toks, i + 1, "[", "]", end)
             if close < 0:
                 return None
-            inner = _transform(toks, i + 2, close)
+            inner = _transform(toks, i + 2, close, fold)
             # head "array[" (not a possible identifier) marks the BRACKET
-            # constructor: the one operand form the regex path leaves
+            # constructor: the one operand form the regex oracle leaves
             # verbatim before `- 'lit'` (its scanner cannot cross ']'),
             # while array()/struct()/ROW() calls fold as deletes there
             return f"array({inner})", close + 1, _K_CALL, "array["
@@ -178,7 +169,7 @@ def _parse_operand(toks: list[_Tok], i: int, end: int):
             close = _match_close(toks, i + 1, "(", ")", end)
             if close < 0:
                 return None
-            inner = _transform(toks, i + 2, close)
+            inner = _transform(toks, i + 2, close, fold)
             head = "struct" if up == "ROW" else t.text
             text = f"{head}{nxt.lead}({inner}{toks[close].lead})"
             return text, close + 1, _K_CALL, head
@@ -193,7 +184,7 @@ def _parse_operand(toks: list[_Tok], i: int, end: int):
         close = _match_close(toks, i, "(", ")", end)
         if close < 0:
             return None
-        inner = _transform(toks, i + 1, close)
+        inner = _transform(toks, i + 1, close, fold)
         return f"({inner}{toks[close].lead})", close + 1, _K_GROUP, None
     return None
 
@@ -232,7 +223,7 @@ _LIKE_OPS = {"~~": "LIKE", "!~~": "NOT LIKE", "~~*": "ILIKE", "!~~*": "NOT ILIKE
 
 
 def _ci_literal(tok_text: str) -> str:
-    """'AbC' -> '(?i)AbC' (escaped) — same lowering as dialect.ci_pattern."""
+    """'AbC' -> '(?i)AbC' (escaped)."""
     return "'(?i)" + _lit_text(tok_text).replace("'", "''") + "'"
 
 
@@ -251,13 +242,13 @@ def _fold(
     # `- 'key'` jsonb delete: primary operands and jsonb-producing folds
     # (arrows / path ops / deletes / ::? casts) are; literals, booleans
     # from regex folds, element_at results, `::` casts, and interval
-    # arithmetic tails are not. Mirrors the regex path's pass ordering
+    # arithmetic tails are not. Mirrors the regex oracle's pass ordering
     # (delete runs after the jsonb/variant rules, before subscripts and
     # regex operators, with a cast-type guard).
     # the bracket ARRAY[..] constructor escapes the `- 'lit'` delete fold
-    # — matching the regex path, whose operand scanner cannot cross ']'
+    # — matching the regex oracle, whose operand scanner cannot cross ']'
     # (hypothesis r10 divergence; array()/struct()/ROW() CALLS fold on
-    # both paths)
+    # both)
     deletable = (
         kind in (_K_IDENT, _K_CALL, _K_GROUP) and head != "array["
     )
@@ -306,7 +297,7 @@ def _fold(
             # non-integer subscript: Spark-native semantics, emit verbatim
             # (interior still gets PG rewrites) and stop folding — a digit
             # subscript chained after it is caught by the residual guard,
-            # matching the regex path's raise-don't-shift behavior
+            # matching the regex oracle's raise-don't-shift behavior
             text += t.lead + "[" + _transform(toks, j + 1, close)
             text += toks[close].lead + "]"
             return text, close + 1
@@ -504,49 +495,63 @@ def _fold(
 # ---------------------------------------------------------------------------
 
 
-def _transform(toks: list[_Tok], start: int, end: int) -> str:
+def _transform(toks: list[_Tok], start: int, end: int, fold=None) -> str:
     """Rewrite the token slice [start, end) — the recursive workhorse.
-    Emits every token's lead verbatim; only PG constructs change text."""
+    Emits every token's lead verbatim; only the constructs ``fold``
+    claims change text (default: the PG operator folds)."""
     parts: list[str] = []
     i = start
     while i < end:
         t = toks[i]
-        parsed = _parse_operand(toks, i, end)
+        parsed = _parse_operand(toks, i, end, fold)
         if parsed is None:
             parts.append(t.lead + t.text)
             i += 1
             continue
         text, j, kind, head = parsed
-        text, j = _fold(text, kind, head, toks, j, end)
+        text, j = (fold or _fold)(text, kind, head, toks, j, end)
         parts.append(t.lead + text)
         i = j
     return "".join(parts)
 
 
 def rewrite_ast(sql: str) -> str:
-    """Tokenizer/AST-based PG-dialect -> Spark SQL rewrite. Same semantics
-    as ``dialect.rewrite`` (shared lowering helpers), structurally parsed.
-    Idempotent on plain Spark SQL; raises on residual 1-based subscripts
-    the same way the regex path does."""
+    """Operator folds, then the shared clause passes
+    (``dialect._rewrite_clauses``). Idempotent on plain Spark SQL; raises
+    on residual 1-based subscripts and on unbalanced input to a clause
+    lowering."""
     toks, tail = _tokenize(sql)
     out = _transform(toks, 0, len(toks)) + tail
     body, lits = _protect_strings(out)
     _guard_residual_subscripts(body)
-    # QUALIFY (clause-level restructuring) and SIMILAR TO (pattern-literal
-    # conversion) are shared with the regex mode — both operate on the
-    # string-protected text, not on operators needing operand folding
-    qbody = _rewrite_select_into(body)
-    qbody = _rewrite_fetch(qbody)
-    qbody = _rewrite_filter_over(qbody)
-    qbody = _rewrite_ordered_agg(qbody)
-    qbody = _rewrite_generate_series(qbody)
-    qbody = _rewrite_date_bin(qbody, lits)
-    qbody = _rewrite_extract_pg(qbody)
-    qbody = _rewrite_overlaps(qbody)
-    qbody = _rewrite_between_symmetric(qbody)
-    qbody = _rewrite_order_using(qbody)
-    qbody = _rewrite_qualify(qbody)
-    qbody = _rewrite_similar_to(qbody, lits)
+    qbody = _rewrite_clauses(body, lits)
     if qbody is not body:
         out = _restore_strings(qbody, lits)
     return out
+
+
+def rewrite_casts(sql: str, lower) -> str:
+    """Re-emit ``sql`` with each ``operand::type`` cast that
+    ``lower(operand_text, type_text)`` claims replaced by its result
+    (``None`` keeps the cast). Only casts change — no PG operator fold
+    runs — so already-rewritten text is safe input: ``element_at(v, 2) -
+    'k'`` stays arithmetic. ``::`` is left-associative, so a chain
+    ``x::int::d`` hands ``x::int`` to ``lower``."""
+    toks, tail = _tokenize(sql)
+
+    def cast_fold(text, kind, head, toks, j, end):
+        while j < end and toks[j].text == "::":
+            parsed = _parse_type_suffix(toks, j + 1, end)
+            if parsed is None:
+                break
+            type_text, j2 = parsed
+            new = lower(text, type_text)
+            if new is None:
+                new = (
+                    text + toks[j].lead + "::" + toks[j + 1].lead
+                    + _emit_verbatim(toks, j + 1, j2)
+                )
+            text, j = new, j2
+        return text, j
+
+    return _transform(toks, 0, len(toks), cast_fold) + tail

@@ -412,10 +412,10 @@ class Engine:
         if name not in self._prepared:
             raise ValueError(f'prepared statement "{name}" does not exist')
         body = self._prepared[name]
-        from otterbrix_spark.catalog import _split_top_level
         from otterbrix_spark.dialect import (
             _protect_strings,
             _restore_strings,
+            _split_top_level,
         )
 
         args = [

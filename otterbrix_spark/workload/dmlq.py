@@ -867,7 +867,7 @@ def x08(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q99: SELECT INTO + ORDER BY ... USING -----------------------------------
 # Two PG grammar staples with no Spark equivalent, lowered by the
-# dialect in both modes: ``SELECT ... INTO tbl FROM ...`` (the CTAS
+# dialect: ``SELECT ... INTO tbl FROM ...`` (the CTAS
 # variant with the target spliced mid-statement — grammar into_clause;
 # lifted back out to CREATE TABLE AS so the catalog's managed-table
 # CTAS path owns it) and ``ORDER BY x USING <``/``USING >``
@@ -889,7 +889,7 @@ LIMIT 50
 @query(
     "q99_select_into_using", _Q99_ORACLE,
     doc="PG SELECT INTO (-> catalog CTAS) + ORDER BY ... USING </> "
-        "(-> ASC/DESC), both dialect modes; managed table re-read and "
+        "(-> ASC/DESC); managed table re-read and "
         "hash-matched against the direct relational oracle",
 )
 def q99(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -445,8 +445,7 @@ def j14(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- j15: JSONB containment + key existence (@> / ? / ?|) -------------------
 # The PG jsonb predicate operators routed through the ENGINE's SQL seam
-# (both dialect paths lower them — dialect.py scanner rules and
-# dialect_ast._fold): `@>` literal-pattern containment expands to
+# (the dialect lowers them in dialect_ast._fold): `@>` literal-pattern containment expands to
 # get_json_object comparisons at rewrite time, `?`/`?|` to existence
 # probes. The synthetic props payloads are flat {"k": <int>} objects, so
 # the gate exercises number-match containment (69 matches 69.0 — PG
@@ -471,7 +470,7 @@ GROUP BY event_type ORDER BY event_type
     "j15_jsonb_containment", _J15_ORACLE,
     doc="PG jsonb predicate operators through the SQL seam: @> literal "
         "containment, ? / ?| key existence — rewrite-time expansion to "
-        "get_json_object probes on both dialect paths",
+        "get_json_object probes",
 )
 def j15(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otterbrix_spark.engine import Engine

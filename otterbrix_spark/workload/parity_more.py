@@ -1000,7 +1000,7 @@ def w07(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q89: SIMILAR TO (PG SQL-regex) ------------------------------------------
 # PG's third pattern operator: % and _ are wildcards, | + () [] keep
 # regex meaning, and . ^ $ are LITERALS — lowered by the dialect
-# (both modes share dialect._rewrite_similar_to) to an anchored RLIKE.
+# (dialect._rewrite_similar_to) to an anchored RLIKE.
 # DuckDB's own SIMILAR TO is plain-regex (verified: 'abc' SIMILAR TO
 # 'a%' is FALSE there), so the oracle states the CONVERTED anchored
 # regex explicitly — pinning the documented conversion, not echoing it.
@@ -1193,7 +1193,7 @@ def q91(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The SQL-standard top-n clause PG ships and Spark's grammar lacks
 # entirely; the dialect layer lowers ONLY-form to LIMIT/OFFSET and
 # WITH TIES through the standard RANK() equivalence + the existing
-# QUALIFY pass (dialect.py::_rewrite_fetch, shared by both modes).
+# QUALIFY pass (dialect.py::_rewrite_fetch).
 # DuckDB doesn't parse WITH TIES either, so the oracle states the
 # RANK() equivalence explicitly — pinning the documented lowering.
 # The tie band (o_orderkey % 50) makes the peers-of-the-nth-row
@@ -1231,8 +1231,8 @@ def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q93: ordered aggregates (PG inline ORDER BY) ---------------------------
 # PG's `agg(x [, sep] ORDER BY keys)` syntax, which Spark's grammar
-# rejects at parse time. The dialect lowers (both modes,
-# dialect.py::_rewrite_ordered_agg): string_agg -> the SQL-standard
+# rejects at parse time. The dialect lowers
+# (dialect.py::_rewrite_ordered_agg): string_agg -> the SQL-standard
 # listagg ... WITHIN GROUP Spark 4 parses natively; array_agg ->
 # sort_array(collect_list/-set) when ordered by itself, and the
 # struct-sort transform for foreign sort keys. Arrays are serialized to
@@ -1255,8 +1255,8 @@ GROUP BY c_mktsegment ORDER BY c_mktsegment
 @query(
     "q93_ordered_aggs", _Q93_ORACLE,
     doc="PG inline ORDER BY in aggregates: string_agg -> listagg WITHIN "
-        "GROUP, array_agg -> sort_array / struct-sort transform, both "
-        "dialect modes; element order certified via string serialization",
+        "GROUP, array_agg -> sort_array / struct-sort transform; "
+        "element order certified via string serialization",
 )
 def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otterbrix_spark.engine import Engine
@@ -1279,7 +1279,7 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The PG table function every spine/series query starts from; Spark has
 # sequence() + explode but no FROM-position function of that name. The
 # dialect lowers table-position calls (FROM / comma-FROM / JOIN) to a
-# derived table and select-list calls to a bare explode, both modes.
+# derived table and select-list calls to a bare explode.
 # Shape below is the comma-FROM cross join against a fact table — each
 # order tested against every divisor — which also re-certifies the
 # comma-FROM -> join tree path (q35) through a rewritten relation.
@@ -1425,7 +1425,7 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Two PG EXTRACT fields Spark refuses outright ("Cannot extract `epoch`
 # ..."): EPOCH (seconds since 1970 incl. microsecond fraction — the
 # single most common PG time-to-number idiom) and ISODOW (Mon=1..Sun=7;
-# Spark's dayofweek is Sun=1). The dialect lowers both in both modes
+# Spark's dayofweek is Sun=1). The dialect lowers both
 # (dialect.py::_rewrite_extract_pg): epoch = unix_micros / 1000000.0
 # (µs < 2^53, division order-pinned so the oracle replaying the same
 # two ops is bit-identical), isodow = pmod(dayofweek+5, 7)+1. The gate
@@ -1444,8 +1444,8 @@ FROM events GROUP BY 1 ORDER BY isodow
 
 @query(
     "q97_extract_epoch_isodow", _Q97_ORACLE,
-    doc="PG EXTRACT(EPOCH)/EXTRACT(ISODOW) dialect lowering (both "
-        "modes): ISO-weekday histogram with floored epoch-second sums "
+    doc="PG EXTRACT(EPOCH)/EXTRACT(ISODOW) dialect lowering: "
+        "ISO-weekday histogram with floored epoch-second sums "
         "vs DuckDB's native extract fields",
 )
 def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1469,7 +1469,7 @@ def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (s1, e1) OVERLAPS (s2, e2) — the PG/SQL-standard period-intersection
 # predicate Spark's parser rejects. The dialect expands it to the full
 # definitional CASE (half-open intervals, endpoint swap, zero-length
-# period = instant — PG's documented edge table) in both modes
+# period = instant — PG's documented edge table)
 # (dialect.py::_rewrite_overlaps). The gate exercises the period form
 # in WHERE and the instant form in a conditional aggregate; the oracle
 # derives both predicates independently from the half-open definition,
@@ -1489,7 +1489,7 @@ WHERE o_orderdate < DATE '1995-03-10'
 @query(
     "q98_overlaps_predicate", _Q98_ORACLE,
     doc="SQL-standard (s,e) OVERLAPS (s,e) lowered to the definitional "
-        "half-open CASE in both dialect modes — period form in WHERE, "
+        "half-open CASE — period form in WHERE, "
         "instant form in a conditional aggregate, oracle derived "
         "independently from the definition",
 )
@@ -1613,7 +1613,7 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pg_dump, psql \d output, and PG logs spell LIKE as operators: ~~ /
 # !~~ / ~~* / !~~*. A reference user replaying dumped view definitions
 # hits them immediately; the dialect lowers all four to Spark's native
-# LIKE / NOT LIKE / ILIKE / NOT ILIKE in both modes (longest-first so
+# LIKE / NOT LIKE / ILIKE / NOT ILIKE (longest-first so
 # the single-tilde regex operators never half-match). The oracle is
 # written with the keyword forms — independent derivation of the same
 # predicate semantics, case-sensitivity pinned per operator.
@@ -1634,8 +1634,8 @@ FROM part
 @query(
     "q102_like_op_spellings", _Q102_ORACLE,
     doc="PG LIKE-operator spellings ~~ / !~~ / ~~* / !~~* (pg_dump "
-        "output) lowered to LIKE / NOT LIKE / ILIKE / NOT ILIKE in both "
-        "dialect modes; oracle written with the keyword forms",
+        "output) lowered to LIKE / NOT LIKE / ILIKE / NOT ILIKE; "
+        "oracle written with the keyword forms",
 )
 def q102(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otterbrix_spark.engine import Engine
@@ -1660,7 +1660,7 @@ def q102(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q103: BETWEEN SYMMETRIC --------------------------------------------------
 # PG's unordered-bounds BETWEEN (grammar a_expr BETWEEN SYMMETRIC): the
 # engine swaps the bounds when given in descending order. Spark has no
-# SYMMETRIC; the dialect lowers to least/greatest bounds in both modes.
+# SYMMETRIC; the dialect lowers to least/greatest bounds.
 # The gate deliberately passes the bounds REVERSED (high first) in both
 # a WHERE and a NOT-form conditional aggregate; the oracle uses plain
 # BETWEEN with correctly ordered bounds — independent derivation, so
@@ -1678,7 +1678,7 @@ WHERE o_orderdate BETWEEN DATE '1995-03-01' AND DATE '1995-03-20'
 @query(
     "q103_between_symmetric", _Q103_ORACLE,
     doc="BETWEEN SYMMETRIC with deliberately reversed bounds (WHERE + "
-        "NOT form) lowered to least/greatest in both dialect modes; "
+        "NOT form) lowered to least/greatest; "
         "oracle uses plain ordered BETWEEN",
 )
 def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1884,7 +1884,7 @@ def o02(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q104: PG array slice syntax arr[a:b] -------------------------------------
 # PG's 1-based inclusive array slicing (parsenodes A_Indices with
-# lidx/uidx) lowered on BOTH dialect paths to Spark's slice(arr, a,
+# lidx/uidx) lowered by the dialect to Spark's slice(arr, a,
 # b-a+1); the oracle runs the SAME PG slice syntax natively on DuckDB
 # (also 1-based inclusive), so the hash certifies the bound arithmetic,
 # not just the parse. Mixed with a plain subscript and a slice over a
@@ -1905,7 +1905,7 @@ LIMIT 200
 @query(
     "q104_array_slice", _Q104_SQL,
     doc="PG array slice [a:b] (1-based inclusive) lowered to "
-        "slice(arr, a, b-a+1) on both dialect paths; subscript + "
+        "slice(arr, a, b-a+1); subscript + "
         "call-group slice + out-of-range clamp, oracle runs the native "
         "PG syntax on DuckDB",
 )

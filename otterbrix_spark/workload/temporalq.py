@@ -2400,7 +2400,7 @@ FROM p ORDER BY user_id, event_id
 @query(
     "w08_filter_over_window", _W08_ORACLE,
     doc="FILTER (WHERE ...) on window aggregates: Spark refuses it, the "
-        "dialect lowers to CASE WHEN in both modes; running conditional "
+        "dialect lowers to CASE WHEN; running conditional "
         "count/sum vs DuckDB's native window FILTER",
 )
 def w08(spark: SparkSession, sf_dir: str) -> DataFrame:

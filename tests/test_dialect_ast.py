@@ -1,17 +1,19 @@
-"""The tokenizer/AST dialect path (`otterbrix_spark/dialect_ast.py`) —
-VERDICT r3/r4 ask #4: a parse-tree rewrite behind a flag, with the regex
-layer as fallback, both paths exercised by the same property suite.
+"""The PG-dialect operator folds (`otterbrix_spark/dialect_ast.py`)
+checked against an independent implementation: the test-only regex
+oracle in `tests/dialect_regex_oracle.py` (an N-version check — the
+engine has one runtime path, the oracle exists only here).
 
 Three layers of evidence:
-  1. cross-path agreement: regex and AST rewrites are byte-identical over
-     the directed corpus and a randomized atom-concatenation fuzz (with the
-     same ambiguous-minus assume the existing property test uses);
-  2. AST-only robustness: constructs the regex layer cannot handle safely
+  1. cross-implementation agreement: `rewrite()` and the oracle are
+     byte-identical over the directed corpus (one case per operator fold)
+     and a randomized atom-concatenation fuzz;
+  2. AST-only robustness: constructs the regex oracle cannot handle safely
      (operators inside comments, quoted identifiers, nested-call delete
      LHS, parameterized ::? types, expression-vs-DDL subscript context)
      rewrite correctly instead of silently mis-rewriting;
   3. end-to-end: the nested-construct oracle gate (j13's shape) runs green
-     with OTTERBRIX_DIALECT_MODE=ast through the full engine.
+     through the full engine, and the engine's rows equal Spark's rows
+     for the oracle's rewrite.
 """
 
 from __future__ import annotations
@@ -21,8 +23,13 @@ import re
 import pytest
 from hypothesis import assume, given, settings, strategies as st
 
+from dialect_regex_oracle import rewrite_regex
 from otterbrix_spark.dialect import rewrite
 from otterbrix_spark.dialect_ast import rewrite_ast
+
+# the two implementations the parametrized clause tests run through; the
+# clause passes are shared, so both must give the asserted output
+PATHS = {"regex": rewrite_regex, "ast": rewrite}
 
 DIRECTED_CORPUS = [
     "SELECT props ->> 'k' FROM events WHERE name ~ '^a'",
@@ -108,16 +115,16 @@ DIRECTED_CORPUS = [
     "SELECT 1 FROM t WHERE a ~~ 'x%' AND b !~~ 'y%' AND c ~~* 'Z%'",
     "SELECT d !~~* 'W%' FROM t",
     "SELECT '~~' AS s, 'BETWEEN SYMMETRIC' AS u, 'OVERLAPS' AS v FROM t",
+    "SELECT EXTRACT(DOW FROM d), date_part('dow', d) FROM t",
+    "SELECT x::varchar ->> 'k', y::character varying ~ 'p' FROM t",
 ]
 
 
 @pytest.mark.parametrize("sql", DIRECTED_CORPUS)
 def test_paths_agree_on_directed_corpus(sql):
-    # explicit modes both ways: under OTTERBRIX_DIALECT_MODE=ast a bare
-    # rewrite() would dispatch to the ast path and compare it to itself.
     # rewrite() (not bare rewrite_ast) so BOTH sides include the shared
     # PG null-ordering post-pass.
-    assert rewrite(sql, mode="regex") == rewrite(sql, mode="ast")
+    assert rewrite_regex(sql) == rewrite(sql)
 
 
 _atoms = st.sampled_from(
@@ -137,9 +144,9 @@ _atoms = st.sampled_from(
 
 # The ONE known intentional divergence: a type keyword ending a `::` cast
 # followed by a whitespace-separated paren group with a digit subscript
-# (`x::bigint (a || b)[1]`) — the regex path must conservatively treat
+# (`x::bigint (a || b)[1]`) — the regex oracle must conservatively treat
 # `bigint (...)` as a parameterized array TYPE (DDL can write it spaced),
-# while the AST path knows it just closed a cast and lowers the 1-based
+# while rewrite() knows it just closed a cast and lowers the 1-based
 # subscript. Covered by test_cast_type_not_glued_to_following_group.
 _CAST_GROUP_SUB = re.compile(r"::\s*\w+\s+\(")
 
@@ -150,11 +157,11 @@ def test_paths_agree_on_random_concatenation(atoms):
     sql = " ".join(atoms)
     assume(not _CAST_GROUP_SUB.search(sql))
     try:
-        expected = rewrite(sql, mode="regex")
+        expected = rewrite_regex(sql)
     except ValueError:
-        expected = None  # regex path raised its residual-subscript guard
+        expected = None  # the oracle raised its residual-subscript guard
     try:
-        got = rewrite(sql, mode="ast")
+        got = rewrite(sql)
     except ValueError:
         got = None
     if expected is None:
@@ -238,15 +245,14 @@ def test_plain_sql_byte_identical_with_comments():
     assert rewrite_ast(sql) == sql
 
 
-# -- end-to-end: engine under OTTERBRIX_DIALECT_MODE=ast ---------------------
+# -- end-to-end through the engine -------------------------------------------
 
 
-def test_engine_nested_construct_under_ast_mode(spark, tmp_path, sf_dir, monkeypatch):
+def test_engine_nested_construct_under_ast_mode(spark, tmp_path, sf_dir):
     from otterbrix_spark.engine import Engine
 
     from oracle import compare
 
-    monkeypatch.setenv("OTTERBRIX_DIALECT_MODE", "ast")
     eng = Engine(spark, table_dir=str(tmp_path))
     eng.register_corpus(sf_dir)
     df = eng.sql(
@@ -274,7 +280,7 @@ def test_engine_nested_construct_under_ast_mode(spark, tmp_path, sf_dir, monkeyp
     )
 
 
-def test_engine_regex_and_ast_modes_same_rows(spark, tmp_path, sf_dir, monkeypatch):
+def test_engine_regex_and_ast_modes_same_rows(spark, tmp_path, sf_dir):
     from otterbrix_spark.engine import Engine
 
     sql = (
@@ -284,11 +290,9 @@ def test_engine_regex_and_ast_modes_same_rows(spark, tmp_path, sf_dir, monkeypat
     )
     eng = Engine(spark, table_dir=str(tmp_path / "a"))
     eng.register_corpus(sf_dir)
-    monkeypatch.setenv("OTTERBRIX_DIALECT_MODE", "regex")
-    regex_rows = [tuple(r) for r in eng.sql(sql).collect()]
-    monkeypatch.setenv("OTTERBRIX_DIALECT_MODE", "ast")
-    ast_rows = [tuple(r) for r in eng.sql(sql).collect()]
-    assert regex_rows == ast_rows and len(regex_rows) > 0
+    engine_rows = [tuple(r) for r in eng.sql(sql).collect()]
+    oracle_rows = [tuple(r) for r in spark.sql(rewrite_regex(sql)).collect()]
+    assert engine_rows == oracle_rows and len(engine_rows) > 0
 
 
 def test_composite_star_both_paths():
@@ -299,11 +303,11 @@ def test_composite_star_both_paths():
         ("SELECT (a + b).* FROM t", "SELECT (a + b).* FROM t"),  # expr: keep
     ]
     for src, want in cases:
-        assert rewrite(src, mode="regex") == want, src
+        assert rewrite_regex(src) == want, src
         assert rewrite_ast(src) == want, src
 
 
-# --- QUALIFY lowering (both modes share dialect._rewrite_qualify) ------------
+# --- QUALIFY lowering (shared dialect._rewrite_qualify) ----------------------
 
 
 QUALIFY_CASES = [
@@ -325,36 +329,34 @@ QUALIFY_CASES = [
 ]
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
+@pytest.mark.parametrize("path", ["regex", "ast"])
 @pytest.mark.parametrize("src,expected", QUALIFY_CASES)
-def test_qualify_lowering(mode, src, expected):
-    assert " ".join(rewrite(src, mode=mode).split()) == expected
+def test_qualify_lowering(path, src, expected):
+    assert " ".join(PATHS[path](src).split()) == expected
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_qualify_inside_cte_scopes_to_its_select(mode):
-    out = rewrite(
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_qualify_inside_cte_scopes_to_its_select(path):
+    out = PATHS[path](
         "WITH x AS (SELECT a, rank() OVER (ORDER BY b) AS r FROM t "
-        "QUALIFY r < 10) SELECT * FROM x ORDER BY a",
-        mode=mode,
+        "QUALIFY r < 10) SELECT * FROM x ORDER BY a"
     )
     norm = " ".join(out.split())
     assert norm.startswith("WITH x AS (SELECT * FROM (SELECT a,")
     assert norm.endswith("WHERE r < 10 ) SELECT * FROM x ORDER BY a NULLS LAST")
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_qualify_word_in_string_literal_untouched(mode):
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_qualify_word_in_string_literal_untouched(path):
     src = "SELECT 'QUALIFY me' AS s FROM t"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_qualify_executes_on_spark(spark, mode):
-    out = rewrite(
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_qualify_executes_on_spark(spark, path):
+    out = PATHS[path](
         "SELECT a, b FROM VALUES (1, 10), (1, 20), (2, 5) t(a, b) "
-        "QUALIFY row_number() OVER (PARTITION BY a ORDER BY b DESC) = 1",
-        mode=mode,
+        "QUALIFY row_number() OVER (PARTITION BY a ORDER BY b DESC) = 1"
     )
     rows = sorted(tuple(r) for r in spark.sql(out).collect())
     assert rows == [(1, 20), (2, 5)]
@@ -363,24 +365,22 @@ def test_qualify_executes_on_spark(spark, mode):
 # --- SIMILAR TO lowering ------------------------------------------------------
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_similar_to_lowering(mode):
-    out = rewrite("SELECT a FROM t WHERE x SIMILAR TO 'v1.2%'", mode=mode)
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_similar_to_lowering(path):
+    out = PATHS[path]("SELECT a FROM t WHERE x SIMILAR TO 'v1.2%'")
     assert out == "SELECT a FROM t WHERE x RLIKE '^(?:v1\\\\.2.*)$'"
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_not_similar_to_and_class(mode):
-    out = rewrite(
-        "SELECT a FROM t WHERE x NOT SIMILAR TO '%[%_]end'", mode=mode
-    )
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_not_similar_to_and_class(path):
+    out = PATHS[path]("SELECT a FROM t WHERE x NOT SIMILAR TO '%[%_]end'")
     assert out == "SELECT a FROM t WHERE x NOT RLIKE '^(?:.*[%_]end)$'"
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_similar_to_in_string_untouched(mode):
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_similar_to_in_string_untouched(path):
     src = "SELECT 'x SIMILAR TO y' AS s FROM t"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
 def test_similar_to_semantics_on_spark(spark):
@@ -394,30 +394,26 @@ def test_similar_to_semantics_on_spark(spark):
     assert [r.v for r in rows] == ["a.c"]
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_fetch_only_lowered(mode):
-    out = rewrite(
-        "SELECT a FROM t ORDER BY a FETCH FIRST 5 ROWS ONLY", mode=mode
-    )
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_fetch_only_lowered(path):
+    out = PATHS[path]("SELECT a FROM t ORDER BY a FETCH FIRST 5 ROWS ONLY")
     assert "LIMIT 5" in out and "FETCH" not in out
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_fetch_offset_and_default_count(mode):
-    out = rewrite(
-        "SELECT a FROM t ORDER BY a OFFSET 3 ROWS FETCH NEXT 5 ROWS ONLY",
-        mode=mode,
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_fetch_offset_and_default_count(path):
+    out = PATHS[path](
+        "SELECT a FROM t ORDER BY a OFFSET 3 ROWS FETCH NEXT 5 ROWS ONLY"
     )
     assert "LIMIT 5 OFFSET 3" in out
-    out = rewrite("SELECT a FROM t FETCH FIRST ROW ONLY", mode=mode)
+    out = PATHS[path]("SELECT a FROM t FETCH FIRST ROW ONLY")
     assert "LIMIT 1" in out
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_fetch_with_ties_lowers_through_qualify(mode):
-    out = rewrite(
-        "SELECT a, b FROM t ORDER BY b DESC, a FETCH FIRST 10 ROWS WITH TIES",
-        mode=mode,
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_fetch_with_ties_lowers_through_qualify(path):
+    out = PATHS[path](
+        "SELECT a, b FROM t ORDER BY b DESC, a FETCH FIRST 10 ROWS WITH TIES"
     )
     assert ("RANK() OVER (ORDER BY b DESC NULLS FIRST, a NULLS LAST) "
             "<= 10") in out
@@ -425,10 +421,10 @@ def test_fetch_with_ties_lowers_through_qualify(mode):
     assert "FETCH" not in out and "QUALIFY" not in out
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_fetch_with_ties_requires_order_by(mode):
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_fetch_with_ties_requires_order_by(path):
     with pytest.raises(ValueError, match="WITH TIES"):
-        rewrite("SELECT a FROM t FETCH FIRST 5 ROWS WITH TIES", mode=mode)
+        PATHS[path]("SELECT a FROM t FETCH FIRST 5 ROWS WITH TIES")
 
 
 def test_fetch_with_ties_semantics_on_spark(spark):
@@ -444,22 +440,21 @@ def test_fetch_with_ties_semantics_on_spark(spark):
     assert sorted(r.v for r in rows) == [1, 1, 2, 2]
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_filter_over_window_lowered(mode):
-    out = rewrite(
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_filter_over_window_lowered(path):
+    out = PATHS[path](
         "SELECT SUM(x) FILTER (WHERE x > 0) OVER (PARTITION BY k) AS s, "
-        "COUNT(*) FILTER (WHERE x < 0) OVER (PARTITION BY k) AS n FROM t",
-        mode=mode,
+        "COUNT(*) FILTER (WHERE x < 0) OVER (PARTITION BY k) AS n FROM t"
     )
     assert "SUM(CASE WHEN x > 0 THEN x END) OVER" in out
     assert "COUNT(CASE WHEN x < 0 THEN 1 END) OVER" in out
     assert "FILTER" not in out
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_filter_grouped_agg_untouched(mode):
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_filter_grouped_agg_untouched(path):
     src = "SELECT COUNT(*) FILTER (WHERE x > 2) AS g FROM t GROUP BY k"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
 def test_filter_over_window_semantics_on_spark(spark):
@@ -477,58 +472,48 @@ def test_filter_over_window_semantics_on_spark(spark):
     assert got == {(1, 10), (2, None)}
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_ordered_agg_lowerings(mode):
-    out = rewrite(
-        "SELECT string_agg(v, ',' ORDER BY v) FROM t", mode=mode
-    )
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_ordered_agg_lowerings(path):
+    out = PATHS[path]("SELECT string_agg(v, ',' ORDER BY v) FROM t")
     assert "listagg" in out and "WITHIN GROUP (ORDER BY v)" in out
-    out = rewrite("SELECT array_agg(v ORDER BY v DESC) FROM t", mode=mode)
+    out = PATHS[path]("SELECT array_agg(v ORDER BY v DESC) FROM t")
     assert out == "SELECT sort_array(collect_list(v), false) FROM t"
-    out = rewrite(
-        "SELECT array_agg(name ORDER BY age, id) FROM t", mode=mode
-    )
+    out = PATHS[path]("SELECT array_agg(name ORDER BY age, id) FROM t")
     assert "struct(age AS __otx_k0, id AS __otx_k1, name AS __otx_v)" in out
-    out = rewrite(
-        "SELECT array_agg(DISTINCT v ORDER BY v) FROM t", mode=mode
-    )
+    out = PATHS[path]("SELECT array_agg(DISTINCT v ORDER BY v) FROM t")
     assert out == "SELECT sort_array(collect_set(v)) FROM t"
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_ordered_agg_mixed_direction_raises(mode):
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_ordered_agg_mixed_direction_raises(path):
     with pytest.raises(ValueError, match="mixed ASC/DESC"):
-        rewrite(
-            "SELECT array_agg(v ORDER BY a ASC, b DESC) FROM t", mode=mode
-        )
+        PATHS[path]("SELECT array_agg(v ORDER BY a ASC, b DESC) FROM t")
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_plain_aggs_untouched(mode):
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_plain_aggs_untouched(path):
     src = "SELECT string_agg(v, ','), array_agg(v) FROM t"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_date_bin_lowered(mode):
-    out = rewrite(
-        "SELECT date_bin('15 minutes', ts, TIMESTAMP '2024-01-01') FROM t",
-        mode=mode,
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_date_bin_lowered(path):
+    out = PATHS[path](
+        "SELECT date_bin('15 minutes', ts, TIMESTAMP '2024-01-01') FROM t"
     )
     assert "pmod" in out and "900000000" in out and "date_bin" not in out
-    out = rewrite(
-        "SELECT date_bin(INTERVAL '1 hour 30 minutes', ts, o) FROM t",
-        mode=mode,
+    out = PATHS[path](
+        "SELECT date_bin(INTERVAL '1 hour 30 minutes', ts, o) FROM t"
     )
     assert "5400000000" in out
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_date_bin_rejects_bad_stride(mode):
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_date_bin_rejects_bad_stride(path):
     with pytest.raises(ValueError, match="interval"):
-        rewrite("SELECT date_bin(x, ts, o) FROM t", mode=mode)
+        PATHS[path]("SELECT date_bin(x, ts, o) FROM t")
     with pytest.raises(ValueError, match="unit"):
-        rewrite("SELECT date_bin('3 fortnights', ts, o) FROM t", mode=mode)
+        PATHS[path]("SELECT date_bin('3 fortnights', ts, o) FROM t")
 
 
 def test_date_bin_semantics_on_spark(spark):
@@ -545,21 +530,21 @@ def test_date_bin_semantics_on_spark(spark):
     assert rows[0].b == "2023-12-31 23:37:30"
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_generate_series_table_position(mode):
-    out = rewrite("SELECT * FROM generate_series(1, 10) AS t(i)", mode=mode)
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_generate_series_table_position(path):
+    out = PATHS[path]("SELECT * FROM generate_series(1, 10) AS t(i)")
     assert out == "SELECT * FROM (SELECT explode(sequence(1, 10)) AS i) t"
-    out = rewrite(
-        "SELECT d.n FROM orders o, generate_series(1, 3) AS d(n)", mode=mode
+    out = PATHS[path](
+        "SELECT d.n FROM orders o, generate_series(1, 3) AS d(n)"
     )
     assert "(SELECT explode(sequence(1, 3)) AS n) d" in out
-    out = rewrite("SELECT * FROM generate_series(0, 9, 3) g", mode=mode)
+    out = PATHS[path]("SELECT * FROM generate_series(0, 9, 3) g")
     assert "sequence(0, 9, 3)" in out and ") g" in out
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_generate_series_select_list(mode):
-    out = rewrite("SELECT generate_series(1, 3) AS i, x FROM t", mode=mode)
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_generate_series_select_list(path):
+    out = PATHS[path]("SELECT generate_series(1, 3) AS i, x FROM t")
     assert out == "SELECT explode(sequence(1, 3)) AS i, x FROM t"
 
 
@@ -572,69 +557,121 @@ def test_generate_series_semantics_on_spark(spark):
     assert sorted(r.i for r in rows) == [2, 5, 8]
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_extract_pg_lowered(mode):
-    out = rewrite("SELECT EXTRACT(EPOCH FROM ts) FROM t", mode=mode)
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_extract_pg_lowered(path):
+    out = PATHS[path]("SELECT EXTRACT(EPOCH FROM ts) FROM t")
     assert "unix_micros" in out and "1000000.0" in out
     assert "EPOCH" not in out.upper()
-    out = rewrite("SELECT extract(isodow FROM d) FROM t", mode=mode)
+    out = PATHS[path]("SELECT extract(isodow FROM d) FROM t")
     assert "pmod(dayofweek((d)) + 5, 7) + 1" in out
-    # Spark-supported fields pass through untouched
-    src = "SELECT EXTRACT(DOW FROM ts), EXTRACT(YEAR FROM ts) FROM t"
-    assert rewrite(src, mode=mode) == src
+    # DOW follows PG's Sunday=0 numbering (Spark's DOW is Sunday=1)
+    out = PATHS[path]("SELECT EXTRACT(DOW FROM ts), date_part('dow', ts) FROM t")
+    assert out == "SELECT (dayofweek((ts)) - 1), (dayofweek((ts)) - 1) FROM t"
+    # fields whose Spark semantics match PG pass through untouched
+    src = "SELECT EXTRACT(YEAR FROM ts), date_part('doy', ts) FROM t"
+    assert PATHS[path](src) == src
     # nested call operand
-    out = rewrite(
-        "SELECT EXTRACT(EPOCH FROM coalesce(a, b)) FROM t", mode=mode
-    )
+    out = PATHS[path]("SELECT EXTRACT(EPOCH FROM coalesce(a, b)) FROM t")
     assert "coalesce(a, b)" in out
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_overlaps_lowered(mode):
-    out = rewrite(
-        "SELECT 1 FROM t WHERE (a, b) OVERLAPS (c, d)", mode=mode
+def test_dow_follows_pg_numbering_over_a_week(spark):
+    # 2024-01-07 is a Sunday: PG numbers it 0 for DOW and 7 for ISODOW
+    from otterbrix_spark.engine import Engine
+
+    rows = Engine(spark).sql(
+        "SELECT d, EXTRACT(DOW FROM d) AS dow, date_part('dow', d) AS dp, "
+        "EXTRACT(ISODOW FROM d) AS iso "
+        "FROM (SELECT explode(sequence(DATE '2024-01-07', "
+        "DATE '2024-01-13')) AS d) ORDER BY d"
+    ).collect()
+    assert [r.dow for r in rows] == [0, 1, 2, 3, 4, 5, 6]
+    assert [r.dp for r in rows] == [0, 1, 2, 3, 4, 5, 6]
+    assert [r.iso for r in rows] == [7, 1, 2, 3, 4, 5, 6]
+
+
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_text_casts_lowered(path):
+    out = PATHS[path](
+        "SELECT a::text, b::VARCHAR, c :: character varying, d::varchar(5), "
+        "'x::text' FROM t"
     )
+    assert out == (
+        "SELECT a::string, b::string, c :: string, d::varchar(5), "
+        "'x::text' FROM t"
+    )
+
+
+def test_text_casts_execute_on_spark(spark):
+    from otterbrix_spark.engine import Engine
+
+    row = Engine(spark).sql(
+        "SELECT 42::text AS a, 7::varchar AS b, "
+        "1.5::character varying AS c"
+    ).collect()[0]
+    assert tuple(row) == ("42", "7", "1.5")
+
+
+def test_rewrite_casts_lowers_only_claimed_casts():
+    from otterbrix_spark.dialect_ast import rewrite_casts
+
+    def lower(lhs, type_text):
+        return f"D({lhs})" if type_text.lower() == "posint" else None
+
+    sql = (
+        "SELECT element_at(v, 2) - 'k', x::int, (2 + 3)::posint, "
+        "NULL::PosInt, '4'::int::posint, f(a, 5::posint) "
+        "FROM t -- 1::posint"
+    )
+    # no PG fold re-runs on rewritten text: the `- 'k'` stays arithmetic
+    assert rewrite_casts(sql, lower) == (
+        "SELECT element_at(v, 2) - 'k', x::int, D((2 + 3)), "
+        "D(NULL), D('4'::int), f(a, D(5)) "
+        "FROM t -- 1::posint"
+    )
+
+
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_overlaps_lowered(path):
+    out = PATHS[path]("SELECT 1 FROM t WHERE (a, b) OVERLAPS (c, d)")
     assert "OVERLAPS" not in out.upper()
     assert "least(a, b)" in out and "greatest(c, d)" in out
     assert out.count("CASE WHEN") == 1
     # literal 'OVERLAPS' inside a string is untouched
     src = "SELECT 'x OVERLAPS y' AS s FROM t"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
     with pytest.raises(ValueError, match="OVERLAPS"):
-        rewrite("SELECT 1 WHERE (a, b, c) OVERLAPS (d, e)", mode=mode)
+        PATHS[path]("SELECT 1 WHERE (a, b, c) OVERLAPS (d, e)")
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_select_into_lowered(mode):
-    out = rewrite(
-        "SELECT a, b INTO t2 FROM t WHERE a > 0", mode=mode
-    )
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_select_into_lowered(path):
+    out = PATHS[path]("SELECT a, b INTO t2 FROM t WHERE a > 0")
     assert out == "CREATE TABLE t2 AS SELECT a, b FROM t WHERE a > 0"
-    out = rewrite("SELECT a INTO TEMP t3 FROM t", mode=mode)
+    out = PATHS[path]("SELECT a INTO TEMP t3 FROM t")
     assert out.startswith("CREATE TABLE t3 AS")
     # INSERT INTO / MERGE INTO / subquery INTO-free forms untouched
     src = "INSERT INTO t SELECT 1"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
     src = "SELECT a FROM t WHERE x IN (SELECT y FROM u)"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_order_using_lowered(mode):
-    out = rewrite("SELECT a FROM t ORDER BY a USING >, b USING <", mode=mode)
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_order_using_lowered(path):
+    out = PATHS[path]("SELECT a FROM t ORDER BY a USING >, b USING <")
     assert out == ("SELECT a FROM t ORDER BY a DESC NULLS FIRST, "
                    "b ASC NULLS LAST")
     # JOIN ... USING(...) untouched
     src = "SELECT * FROM a JOIN b USING (k)"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_like_operator_spellings(mode):
-    out = rewrite(
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_like_operator_spellings(path):
+    out = PATHS[path](
         "SELECT 1 FROM t WHERE a ~~ 'x%' AND b !~~ 'y%' "
-        "AND c ~~* 'Z%' AND d !~~* 'W%'",
-        mode=mode,
+        "AND c ~~* 'Z%' AND d !~~* 'W%'"
     )
     assert "a LIKE 'x%'" in out
     assert "b NOT LIKE 'y%'" in out
@@ -642,35 +679,33 @@ def test_like_operator_spellings(mode):
     assert "d NOT ILIKE 'W%'" in out
     assert "~~" not in out
     # plain regex ops still work beside them
-    out = rewrite("SELECT a ~~ 'x%', b ~ 'p' FROM t", mode=mode)
+    out = PATHS[path]("SELECT a ~~ 'x%', b ~ 'p' FROM t")
     assert "a LIKE 'x%'" in out and "b RLIKE 'p'" in out
     # literal containing ~~ untouched
     src = "SELECT '~~' AS s FROM t"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
-def test_between_symmetric_lowered(mode):
-    out = rewrite(
-        "SELECT 1 FROM t WHERE x BETWEEN SYMMETRIC b AND a AND y > 2",
-        mode=mode,
+@pytest.mark.parametrize("path", ["regex", "ast"])
+def test_between_symmetric_lowered(path):
+    out = PATHS[path](
+        "SELECT 1 FROM t WHERE x BETWEEN SYMMETRIC b AND a AND y > 2"
     )
     assert "BETWEEN least(b, a) AND greatest(b, a)" in out
     assert "SYMMETRIC" not in out
     assert "y > 2" in out
     # NOT form, call operands, parenthesized context
-    out = rewrite(
+    out = PATHS[path](
         "SELECT CASE WHEN x NOT BETWEEN SYMMETRIC f(a, 1) AND g(b) "
-        "THEN 1 ELSE 0 END FROM t",
-        mode=mode,
+        "THEN 1 ELSE 0 END FROM t"
     )
     assert "NOT BETWEEN least(f(a, 1), g(b)) AND greatest(f(a, 1), g(b))" in out
     # plain BETWEEN untouched
     src = "SELECT x BETWEEN 1 AND 2 FROM t"
-    assert rewrite(src, mode=mode) == src
+    assert PATHS[path](src) == src
 
 
-# --- PG null-ordering defaults (shared post-pass, both modes) ----------------
+# --- PG null-ordering defaults (shared post-pass) ----------------------------
 
 
 NULL_ORDER_CASES = [
@@ -707,13 +742,13 @@ NULL_ORDER_CASES = [
 ]
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
+@pytest.mark.parametrize("path", ["regex", "ast"])
 @pytest.mark.parametrize("src,expected", NULL_ORDER_CASES)
-def test_pg_null_ordering_defaults(mode, src, expected):
-    out = rewrite(src, mode=mode)
+def test_pg_null_ordering_defaults(path, src, expected):
+    out = PATHS[path](src)
     assert out == expected, out
     # idempotent: a second pass changes nothing
-    assert rewrite(out, mode=mode) == out
+    assert PATHS[path](out) == out
 
 
 def test_pg_null_ordering_on_spark(spark):
@@ -753,12 +788,12 @@ NULL_ORDER_EDGE_CASES = [
 ]
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
+@pytest.mark.parametrize("path", ["regex", "ast"])
 @pytest.mark.parametrize("src,expected", NULL_ORDER_EDGE_CASES)
-def test_pg_null_ordering_edge_cases(mode, src, expected):
-    out = rewrite(src, mode=mode)
+def test_pg_null_ordering_edge_cases(path, src, expected):
+    out = PATHS[path](src)
     assert out == expected, out
-    assert rewrite(out, mode=mode) == out
+    assert PATHS[path](out) == out
 
 
 NULL_ORDER_COMMENT_CASES = [
@@ -783,9 +818,9 @@ NULL_ORDER_COMMENT_CASES = [
 ]
 
 
-@pytest.mark.parametrize("mode", ["regex", "ast"])
+@pytest.mark.parametrize("path", ["regex", "ast"])
 @pytest.mark.parametrize("src,expected", NULL_ORDER_COMMENT_CASES)
-def test_pg_null_ordering_comment_safety(mode, src, expected):
-    out = rewrite(src, mode=mode)
+def test_pg_null_ordering_comment_safety(path, src, expected):
+    out = PATHS[path](src)
     assert out == expected, out
-    assert rewrite(out, mode=mode) == out
+    assert PATHS[path](out) == out

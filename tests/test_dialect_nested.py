@@ -1,7 +1,8 @@
 """Deeply-nested dialect constructs, end-to-end against the DuckDB oracle.
 
-The dialect layer is a regex rewriter (`otterbrix_spark/dialect.py`) with
-string-literal protection; its likeliest silent-misparse zone is PG
+The dialect layer (`otterbrix_spark/dialect.py` + `dialect_ast.py`) is a
+tokenizer-based rewriter, not a full parser; its likeliest silent-misparse
+zone is PG
 operators NESTED inside CASE / subqueries / casts rather than at top level
 (VERDICT r3 "What's missing" #4). Each test here routes a nested construct
 through the full engine SQL surface (`Engine.execute_sql` -> dialect

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import assume, given, settings, strategies as st
 
 from otterbrix_spark.dialect import apply_pg_null_ordering, rewrite
@@ -83,6 +84,79 @@ def test_rewrite_idempotent_on_rewritten_output():
     for sql in samples:
         once = rewrite(sql)
         assert rewrite(once) == once
+
+
+# -- unbalanced input to a clause lowering ------------------------------------
+# Each lowering finds its argument list with the shared paren scanner. An
+# argument list that never closes must raise, not be closed silently at
+# the end of the statement (which produced balanced but wrong SQL).
+
+UNBALANCED = [
+    "SELECT EXTRACT(EPOCH FROM ts FROM t",
+    "SELECT EXTRACT(ISODOW FROM d FROM t",
+    "SELECT 1 FROM t WHERE (a, b) OVERLAPS (c, d",
+    "SELECT date_bin('15 minutes', ts, TIMESTAMP '2024-01-01' FROM t",
+    "SELECT * FROM generate_series(1, 10 AS g",
+]
+
+
+@pytest.mark.parametrize("sql", UNBALANCED)
+def test_unbalanced_lowering_raises(sql):
+    with pytest.raises(ValueError, match="unbalanced"):
+        rewrite(sql)
+
+
+_PAREN_CONSTRUCTS = [
+    "EXTRACT(EPOCH FROM ts)",
+    "EXTRACT(ISODOW FROM coalesce(a, b))",
+    "EXTRACT(DOW FROM d)",
+    "date_part('dow', d)",
+    "(a, b) OVERLAPS (c, f(d))",
+    "date_bin('15 minutes', ts, o)",
+    "generate_series(1, 10)",
+    "string_agg(v, ')' ORDER BY v)",
+    "SUM(x) FILTER (WHERE x > 0) OVER (PARTITION BY k)",
+]
+_STR_LITERAL = re.compile(r"'(?:[^']|'')*'")
+
+
+def _paren_balance(sql: str) -> int:
+    code = _STR_LITERAL.sub("", sql)
+    return code.count("(") - code.count(")")
+
+
+def _drop_closers(text: str, n: int) -> str:
+    """``text`` without its last ``n`` closing parens (a truncated form)."""
+    for _ in range(n):
+        k = text.rfind(")")
+        if k < 0:
+            break
+        text = text[:k] + text[k + 1:]
+    return text
+
+
+@given(
+    items=st.lists(
+        st.tuples(st.sampled_from(_PAREN_CONSTRUCTS), st.integers(0, 2)),
+        min_size=1, max_size=3,
+    ),
+    table_fn=st.booleans(),
+    tail=st.sampled_from(["", " FROM t", " FROM t WHERE (x > 1)", ")"]),
+)
+@settings(max_examples=300, deadline=None)
+def test_rewrite_keeps_paren_balance(items, table_fn, tail):
+    # any statement: rewrite() raises ValueError or keeps the paren
+    # balance (counted outside string literals) of its input
+    pieces = [_drop_closers(c, n) for c, n in items]
+    if table_fn:
+        sql = f"SELECT * FROM {pieces[0]} AS g(i)" + tail
+    else:
+        sql = "SELECT " + ", ".join(pieces) + tail
+    try:
+        out = rewrite(sql)
+    except ValueError:
+        return
+    assert _paren_balance(out) == _paren_balance(sql), (sql, out)
 
 
 # -- JSONB delete rewrites (`-` / `#-`) --------------------------------------
@@ -263,11 +337,11 @@ _ADVERSARIAL_ITEMS = st.sampled_from([
 def test_values_walkers_agree_on_adversarial_tuples(rows, idpos):
     from otterbrix_spark.catalog import (
         _map_values_items,
-        _split_top_level,
         _values_explicit_identity,
         _values_set_default,
         _values_tuples,
     )
+    from otterbrix_spark.dialect import _split_top_level
 
     width = len(rows[0])
     rows = [r[:width] + ["1"] * (width - len(r)) for r in rows]

@@ -251,6 +251,14 @@ def test_domain_expr_cast_column_source(eng):
     ) == [4, 8]
 
 
+def test_domain_cast_chain(eng):
+    eng.sql("CREATE DOMAIN posint AS INT CHECK (VALUE > 0)")
+    # `::` is left-associative: the domain coerces `'4'::int`, not `int`
+    assert eng.sql("SELECT '4'::int::posint AS a").collect()[0][0] == 4
+    with pytest.raises(Exception, match="violates"):
+        eng.sql("SELECT '-4'::int::posint AS a").collect()
+
+
 def test_nondomain_cast_untouched(eng):
     # ordinary ::type casts keep Spark's native path
     eng.sql("CREATE DOMAIN posint AS INT CHECK (VALUE > 0)")

@@ -3,7 +3,7 @@
 DEFAULT VALUES/ON CONFLICT, UPDATE incl. txn), explicit-write refusal,
 CREATE-time refusals, ALTER ADD/DROP EXPRESSION, column/table rename
 re-anchoring, reopen persistence. PG reference: tablecmds.c /
-ExecComputeStoredGenerated. Both dialect modes."""
+ExecComputeStoredGenerated."""
 
 from __future__ import annotations
 
@@ -14,9 +14,8 @@ import pytest
 from otterbrix_spark.engine import Engine
 
 
-@pytest.fixture(params=["ast", "regex"])
-def eng(spark, request, monkeypatch):
-    monkeypatch.setenv("OTTERBRIX_DIALECT_MODE", request.param)
+@pytest.fixture()
+def eng(spark):
     return Engine(spark, table_dir=tempfile.mkdtemp(prefix="otx-gencol-"))
 
 

@@ -2,8 +2,7 @@
 CREATE-DROP TYPE/DOMAIN inside BEGIN...ROLLBACK stage-and-roll-back
 cleanly — no half-applied label CHECKs leak past an aborted txn. PG runs
 these statements transactionally; RENAME VALUE's stored-row rewrites
-ride the ordinary staged-DML rollback. Parametrized over both dialect
-modes (ast / regex)."""
+ride the ordinary staged-DML rollback."""
 
 from __future__ import annotations
 
@@ -14,9 +13,8 @@ import pytest
 from otterbrix_spark.engine import Engine
 
 
-@pytest.fixture(params=["ast", "regex"])
-def eng(spark, request, monkeypatch):
-    monkeypatch.setenv("OTTERBRIX_DIALECT_MODE", request.param)
+@pytest.fixture()
+def eng(spark):
     return Engine(spark, table_dir=tempfile.mkdtemp(prefix="otx-txnddl-"))
 
 
