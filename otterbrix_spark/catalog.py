@@ -3799,7 +3799,7 @@ class Catalog:
         if m:
             materialized, name = m.group(1), m.group(2)
             if materialized and name in self.matviews:
-                ManagedTable(self.spark, self.matviews.pop(name).path).drop()
+                self.matviews.pop(name).table.drop()
                 self.matview_sql.pop(name, None)
             self.views.pop(name, None)
             # a dropped view can never be refreshed again — clear its

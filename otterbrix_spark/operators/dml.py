@@ -31,6 +31,7 @@ import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 class ConstraintViolation(Exception):
@@ -58,6 +59,15 @@ def table_write_lock(path: str):
         os.close(fd)
 
 
+def _same_columns(a: StructType, b: StructType) -> bool:
+    """Same column names, types and metadata in the same order. Nullability
+    is left out: every column reads back from parquet as nullable."""
+    def key(s: StructType) -> list:
+        return [(f.name, f.dataType.simpleString(), f.metadata) for f in s.fields]
+
+    return key(a) == key(b)
+
+
 class ManagedTable:
     """A parquet-directory-backed table with DML + RETURNING semantics.
 
@@ -67,7 +77,21 @@ class ManagedTable:
     the declarative half of the 100 TB layout story (bucketBy and
     Z-order live in sources/layout.py). ``schema_ddl`` pins the declared
     schema and column order: partitioned reads otherwise move partition
-    columns to the end and cannot infer types from an empty table."""
+    columns to the end and cannot infer types from an empty table.
+
+    Scan cache: :meth:`df` keeps one frame per table version. The version
+    token is the path plus the listing of the files under it (relative
+    name, size, ``mtime_ns``; partition subdirectories included), a
+    driver-local ``os.walk`` with no JVM call. While the token matches,
+    ``df()`` returns the same frame and runs no Spark job; on a miss it
+    builds the scan as a plain read would (parquet schema inference — one
+    job — or the pinned DDL schema) and keeps it. The table's own writes (the
+    append in :meth:`insert`, the swap in :meth:`commit_staged`) rebind
+    the scan under ``table_write_lock`` with the known schema when the
+    written columns equal the pre-write relation's, and drop it otherwise
+    (ALTER ADD/DROP/RENAME/TYPE), so the next read re-infers. A write by
+    another engine or process changes the listing, so the next ``df()``
+    re-infers and sees it."""
 
     def __init__(
         self,
@@ -81,21 +105,57 @@ class ManagedTable:
         self.path = path
         self.name = name or os.path.basename(path.rstrip("/"))
         self._staged: str | None = None
+        self._staged_schema: StructType | None = None
         self.partition_cols = list(partition_cols or [])
         self.schema_ddl = schema_ddl
+        # (version token, frame) of the last scan; see the class docstring
+        self._scan: "tuple[tuple, DataFrame] | None" = None
 
     # -- scan ---------------------------------------------------------------
     def df(self) -> DataFrame:
-        if self.partition_cols and self.schema_ddl:
-            from pyspark.sql.types import StructType
+        token, scan = self._version(), self._scan
+        if scan is None or scan[0] != token:
+            scan = self._scan = (token, self._read())
+        return scan[1]
 
+    def _version(self) -> tuple:
+        """The version token: the path plus every file under it."""
+        files = []
+        for root, _, names in os.walk(self.path):
+            for n in names:
+                p = os.path.join(root, n)
+                try:
+                    st = os.stat(p)
+                except FileNotFoundError:  # a concurrent swap moved it
+                    continue
+                rel = os.path.relpath(p, self.path)
+                files.append((rel, st.st_size, st.st_mtime_ns))
+        return (self.path, tuple(sorted(files)))
+
+    def _read(self, schema: StructType | None = None) -> DataFrame:
+        """A fresh scan: with the pinned DDL schema for a partitioned
+        table, else with ``schema`` when known, else inferred (one job)."""
+        if self.partition_cols and self.schema_ddl:
             schema = StructType.fromDDL(self.schema_ddl)
             return (
                 self.spark.read.schema(schema)
                 .parquet(self.path)
                 .select(*[f.name for f in schema.fields])
             )
-        return self.spark.read.parquet(self.path)
+        if schema is None:
+            return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(schema).parquet(self.path)
+
+    def _rebind(self, written: StructType | None) -> None:
+        """After this table's own write, under its write lock: keep the
+        pre-write schema when ``written`` has the same columns, else drop
+        the scan so the next :meth:`df` re-infers."""
+        scan = self._scan
+        before = scan[1].schema if scan is not None else None
+        if before is None or written is None or not _same_columns(before, written):
+            self._scan = None
+        else:
+            self._scan = (self._version(), self._read(before))
 
     def exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -125,6 +185,7 @@ class ManagedTable:
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)
+        self._scan = None
 
     # -- DML ----------------------------------------------------------------
     def insert(self, rows: DataFrame, returning: bool = False) -> DataFrame | int:
@@ -141,10 +202,15 @@ class ManagedTable:
             )
         count = rows.count()
         with table_write_lock(self.path):
+            # an append keeps the old files: the cached schema holds only
+            # if no other writer changed them since this insert read it
+            scan = self._scan
+            current = scan is not None and scan[0] == self._version()
             writer = rows.write.mode("append")
             if self.partition_cols:
                 writer = writer.partitionBy(*self.partition_cols)
             writer.parquet(self.path)
+            self._rebind(rows.schema if current else None)
         return self.df_of(rows) if returning else count
 
     @staticmethod
@@ -169,13 +235,18 @@ class ManagedTable:
             self.schema_ddl = new_df.schema.toDDL()
         writer.parquet(tmp)
         self._staged = tmp
+        self._staged_schema = new_df.schema
 
     def commit_staged(self) -> None:
-        """Phase 2: swap the staged directory in (two renames + cleanup)."""
+        """Phase 2: swap the staged directory in (two renames + cleanup).
+        Runs under the table's write lock (``_swap_in`` and COMMIT both
+        hold it), so the scan rebinds to exactly the staged files."""
         old = self.path + ".old-" + uuid.uuid4().hex
         os.rename(self.path, old)
         os.rename(self._staged, self.path)
         self._staged = None
+        self._rebind(self._staged_schema)
+        self._staged_schema = None
         shutil.rmtree(old, ignore_errors=True)
 
     def _swap_in(self, new_df: DataFrame) -> None:
@@ -294,14 +365,19 @@ def apply_update(
     if unknown:
         raise ValueError(f"UPDATE SET targets not in table schema: {unknown}")
     current = df.withColumn("_matched", F.coalesce(cond, F.lit(False)))
+    # each SET value is cast to its column's type (PG assignment
+    # coercion): `v + 1.5` on a decimal(12,2) column must not widen it
     updated = current.select(
         *[
             (
-                F.when(F.col("_matched"), set_exprs[c]).otherwise(F.col(c)).alias(c)
-                if c in set_exprs
-                else F.col(c)
+                F.when(F.col("_matched"), set_exprs[f.name])
+                .otherwise(F.col(f.name))
+                .cast(f.dataType)
+                .alias(f.name)
+                if f.name in set_exprs
+                else F.col(f.name)
             )
-            for c in df.columns
+            for f in df.schema.fields
         ],
         F.col("_matched"),
     )
@@ -328,10 +404,14 @@ def check_constraint(rows: DataFrame, cond: Column, name: str = "check") -> None
 
 def fk_check(child: DataFrame, parent: DataFrame, child_key: str, parent_key: str) -> None:
     """Reference operator_fk_check: child keys must exist in the parent —
-    an anti-join that must come back empty (broadcast when parent is small)."""
+    an anti-join that must come back empty (broadcast when parent is small).
+    The keys join by name under a fresh alias: a self-referencing FK passes
+    the same cached frame as child and parent, where ``child[...]`` and
+    ``parent[...]`` would be one ambiguous column."""
+    keys = parent.select(F.col(parent_key).alias("__parent_key"))
     dangling = (
         child.filter(F.col(child_key).isNotNull())
-        .join(parent.select(parent_key), child[child_key] == parent[parent_key], "left_anti")
+        .join(keys, F.col(child_key) == F.col("__parent_key"), "left_anti")
         .count()
     )
     if dangling:
@@ -374,21 +454,20 @@ def fk_cascade_delete(
 
 class MaterializedView:
     """Reference create_matview_t: body plan lowered to create + insert;
-    REFRESH recomputes and swaps (`node_create_matview.hpp:19-35`)."""
+    REFRESH recomputes and swaps (`node_create_matview.hpp:19-35`). The
+    storage is one :class:`ManagedTable`, so reads share its scan cache."""
 
     def __init__(self, spark: SparkSession, path: str, body):
-        self.spark = spark
-        self.path = path
         self.body = body  # () -> DataFrame
         if not os.path.isdir(path):
             body().write.parquet(path)
+        self.table = ManagedTable(spark, path)
 
     def df(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self.table.df()
 
     def refresh(self) -> None:
-        table = ManagedTable(self.spark, self.path)
-        table._swap_in(self.body())
+        self.table._swap_in(self.body())
 
 
 # -- sequences ---------------------------------------------------------------
