@@ -33,8 +33,10 @@ from otterbrix_spark.dialect import _scan_balanced, _split_top_level
 from otterbrix_spark.operators.dml import (
     ManagedTable,
     MaterializedView,
+    Observed,
     apply_delete,
     apply_update,
+    count_pass,
 )
 
 _CREATE_TABLE = re.compile(
@@ -1452,6 +1454,14 @@ class Catalog:
             *[e.strip() for e in _split_top_level(text) if e.strip()]
         )
 
+    def _status(self, **counts: int) -> DataFrame:
+        """A write's one-row status frame (``updated``, ``deleted``, ...)
+        as a local relation, so fetching it runs no Spark job. Columns are
+        INT, or BIGINT past the INT range, as ``F.lit`` types them."""
+        cols = ", ".join(f"`{c}`" for c in counts)
+        vals = ", ".join(str(int(n)) for n in counts.values())
+        return self.spark.sql(f"VALUES ({vals}) AS t({cols})")
+
     def _stage_txn(
         self,
         name: str,
@@ -1459,10 +1469,12 @@ class Catalog:
         matched: DataFrame,
         verb: str,
         returning,
+        n: int | None = None,
     ) -> DataFrame:
         """Record a staged frame for ``name`` inside the active transaction
         and re-register the temp view so in-transaction reads see the
-        uncommitted state (read-your-writes)."""
+        uncommitted state (read-your-writes). ``n`` is the affected-row
+        count when the caller already took it."""
         self._txn[name] = new_df
         new_df.createOrReplaceTempView(name)
         if returning:
@@ -1484,8 +1496,10 @@ class Catalog:
         # so collecting the status cursor after COMMIT threw
         # FileNotFoundException (ADVICE r8 medium). matched is an
         # immutable captured plan, so counting now equals counting later.
-        n = matched.count()
-        return self.spark.range(1).select(F.lit(n).alias(verb))
+        if n is None:
+            seen = Observed(matched, n=F.count(F.lit(1)))
+            n = count_pass(seen.df, seen)["n"]
+        return self._status(**{verb: n})
 
     def _insert_on_conflict(
         self, name: str, body: str, key_csv: str, con_name, action: str,
@@ -1703,9 +1717,8 @@ class Catalog:
                         F.col("__s.__mid").alias("__mid"),
                     )
                 )
-            fresh = fresh.select(*base.columns)
-            new_df = base.unionByName(fresh)
-            affected = fresh
+            affected = fresh.select(*base.columns)
+            before, after = base, None
         else:
             dup = rows.groupBy(*keys).count().filter(F.col("count") > 1)
             if dup.count() > 0:
@@ -1784,26 +1797,66 @@ class Catalog:
             updated = self._recompute_generated(name, updated)
             unchanged = base.join(rows.select(*keys), keys, "left_anti")
             fresh = rows.join(base.select(*keys), keys, "left_anti")
-            new_df = unchanged.unionByName(updated).unionByName(fresh)
-            if kept is not None:
-                new_df = new_df.unionByName(kept)
             affected = updated.unionByName(fresh)
-        self._validate_new_rows(name, affected, full=new_df)
-        if self._txn is not None:
-            return self._stage_txn(name, new_df, affected, "upserted", returning)
-        # pin the affected rows BEFORE the swap: they are lazy plans over
-        # the pre-swap files, which _swap_in deletes (same discipline as
-        # ManagedTable.update RETURNING)
-        if returning:
-            result = affected.cache()
-            result.count()
-            table._swap_in(new_df)
+            before, after = unchanged, kept
+        seen = Observed(affected, upserted=F.count(F.lit(1)))
+        new_df = before.unionByName(seen.df)
+        if after is not None:
+            new_df = new_df.unionByName(after)
+        return self._publish(
+            name, new_df, seen.df, "upserted", returning, (seen,),
+            lambda m: m["upserted"],
+            lambda _: self._validate_new_rows(name, seen.df, full=new_df),
+        )
+
+    def _publish(
+        self, name, new_df, matched, verb, returning, observed, count,
+        verify=None,
+    ) -> DataFrame:
+        """Publish ``new_df`` as the rows of ``name`` for a join-write
+        (ON CONFLICT, UPDATE…FROM, DELETE…USING, MERGE). ``observed`` are
+        built into ``new_df``'s plan; ``count(metrics)`` is the
+        affected-row count and ``matched`` the affected rows.
+
+        Autocommit without RETURNING runs one Spark action, the staged
+        write: stage → ``verify(metrics)`` → commit. Otherwise no write
+        runs now: one pass to the no-op sink takes the metrics and
+        ``verify`` runs on them; then the frame is staged in the
+        transaction, or (RETURNING) the affected rows are pinned before the
+        table is swapped."""
+        table = self.tables[name]
+        if self._txn is None and not returning:
+            m = table._swap_in(new_df, *observed, verify=verify)
             self._register(table)
-            return self._apply_returning(result, returning)
-        n = affected.count()
+            return self._status(**{verb: count(m)})
+        m = count_pass(new_df, *observed)
+        if verify is not None:
+            verify(m)
+        if self._txn is not None:
+            return self._stage_txn(
+                name, new_df, matched, verb, returning, n=count(m)
+            )
+        # pin the affected rows BEFORE the swap: they are lazy plans over
+        # the pre-swap files, which _swap_in deletes
+        result = matched.cache()
+        count_pass(result)
         table._swap_in(new_df)
         self._register(table)
-        return self.spark.range(1).select(F.lit(n).alias("upserted"))
+        return self._apply_returning(result, returning)
+
+    def _flagged_join(self, base, t_alias, src_name, s_alias, cond_text):
+        """``base`` LEFT JOIN the source on ``cond_text``, the source
+        carrying a ``__hit`` marker (NULL on target rows no source row
+        matches). A target row appears once per matching source row, or
+        once unmatched, so "some target row matched more than once" is
+        exactly ``join_rows != target_rows``; both counts are observed.
+        Returns (joined, target observation)."""
+        target = Observed(base, target_rows=F.count(F.lit(1)))
+        src = self.spark.table(src_name).withColumn("__hit", F.lit(True))
+        joined = target.df.alias(t_alias).join(
+            src.alias(s_alias), F.expr(cond_text), "left"
+        )
+        return joined, target
 
     def _update_from(
         self, name, set_clause, src_name, src_alias, where, returning
@@ -1813,9 +1866,9 @@ class Catalog:
         ambiguity, as in PG). Where PG silently applies an ARBITRARY
         matching src row when several match one target row, this engine
         REFUSES (deterministic-results policy — the same stance as the
-        ON CONFLICT duplicate-arbiter guard). Distributed shape: one join
-        on the predicate, one anti-join for untouched rows, one union —
-        the shuffle-merge of a lakehouse MERGE-matched clause."""
+        ON CONFLICT duplicate-arbiter guard). Distributed shape: one LEFT
+        join of target to source and one projection; the write observes
+        the guard's counts and the updated count."""
         from otterbrix_spark.operators.dml import ConstraintViolation
 
         table = self.tables[name]
@@ -1824,24 +1877,6 @@ class Catalog:
             if self._txn is not None
             else table.df()
         )
-        alias = src_alias or src_name
-        src = self.spark.table(src_name)
-        # localCheckpoint PINS the row ids: the tagged frame feeds three
-        # separate actions (dup guard, update, anti-join) and the ids must
-        # be identical in each
-        tagged = base.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-        joined = tagged.alias(name).join(src.alias(alias), F.expr(where))
-        dup = (
-            joined.groupBy("__rid").count().filter(F.col("count") > 1)
-        )
-        if dup.count() > 0:
-            raise ConstraintViolation(
-                f"UPDATE {name} FROM {src_name}: a target row matches "
-                "multiple source rows (PG applies an arbitrary one; this "
-                "engine refuses non-deterministic updates)"
-            )
         set_txt = _split_set_list(set_clause)
         genu = set(self.generated_cols.get(name, {}))
         badg = sorted(
@@ -1855,32 +1890,45 @@ class Catalog:
             )
         set_txt = {c: e for c, e in set_txt.items() if c not in genu}
         sets = _resolve_set_targets(set_txt)
-        updated = joined.select(
-            *[
-                sets.get(f.name, F.col(f"{name}.{f.name}"))
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in base.schema.fields
-            ]
+        joined, target = self._flagged_join(
+            base, name, src_name, src_alias or src_name, where
         )
-        updated = self._recompute_generated(name, updated)
-        unchanged = tagged.join(
-            joined.select("__rid"), "__rid", "left_anti"
-        ).drop("__rid")
-        new_df = unchanged.unionByName(updated)
-        self._validate_new_rows(name, updated, full=new_df)
-        if self._txn is not None:
-            return self._stage_txn(name, new_df, updated, "updated", returning)
-        if returning:
-            result = updated.cache()
-            result.count()
-            table._swap_in(new_df)
-            self._register(table)
-            return self._apply_returning(result, returning)
-        n = updated.count()
-        table._swap_in(new_df)
-        self._register(table)
-        return self.spark.range(1).select(F.lit(n).alias("updated"))
+        hit = F.col("__hit").isNotNull()
+        flagged = Observed(
+            joined.select(
+                *[
+                    (
+                        F.when(hit, sets[f.name])
+                        .otherwise(F.col(f"{name}.{f.name}"))
+                        if f.name in sets else F.col(f"{name}.{f.name}")
+                    )
+                    .cast(f.dataType)
+                    .alias(f.name)
+                    for f in base.schema.fields
+                ],
+                hit.alias("__hit"),
+            ),
+            join_rows=F.count(F.lit(1)),
+            updated=F.count_if(F.col("__hit")),
+        )
+        new_df = self._recompute_generated(name, flagged.df.drop("__hit"))
+        updated = self._recompute_generated(
+            name, flagged.df.filter(F.col("__hit")).drop("__hit")
+        )
+
+        def verify(m):
+            if m["join_rows"] != m["target_rows"]:
+                raise ConstraintViolation(
+                    f"UPDATE {name} FROM {src_name}: a target row matches "
+                    "multiple source rows (PG applies an arbitrary one; "
+                    "this engine refuses non-deterministic updates)"
+                )
+            self._validate_new_rows(name, updated, full=new_df)
+
+        return self._publish(
+            name, new_df, updated, "updated", returning,
+            (target, flagged), lambda m: m["updated"], verify,
+        )
 
     def _delete_using(
         self, name, tgt_alias, src_name, src_alias, where, returning
@@ -1890,30 +1938,17 @@ class Catalog:
         are deleted (multiple matches are fine: deletion has no
         arbitrary-pick hazard, unlike UPDATE..FROM). Distributed shape:
         one semi-join on the predicate, one anti-join for survivors —
-        the delete-matched half of a lakehouse MERGE."""
-        table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
+        the delete-matched half of a lakehouse MERGE. Both read the same
+        unpinned frame with a deterministic predicate, so together they
+        partition it."""
         talias = tgt_alias or name
-        salias = src_alias or src_name
-        src = self.spark.table(src_name)
-        # localCheckpoint PINS the row ids across the semi/anti pair
-        tagged = base.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-        doomed = tagged.alias(talias).join(
-            src.alias(salias), F.expr(where), "left_semi"
+        src = self.spark.table(src_name).alias(src_alias or src_name)
+        doomed = self._live_df(name).alias(talias).join(
+            src, F.expr(where), "left_semi"
         )
-        new_df = tagged.join(
-            doomed.select("__rid"), "__rid", "left_anti"
-        ).drop("__rid")
-        matched = doomed.drop("__rid")
         # parent-side FK semantics, same as the plain DELETE path
         for child_name, new_child in self._fk_on_delete(
-            name, matched, F.lit(True)
+            name, doomed, F.lit(True)
         ):
             if self._txn is not None:
                 self._txn[child_name] = new_child
@@ -1921,20 +1956,19 @@ class Catalog:
             else:
                 self.tables[child_name]._swap_in(new_child)
                 self._register(self.tables[child_name])
-        if self._txn is not None:
-            return self._stage_txn(
-                name, new_df, matched, "deleted", returning
-            )
-        if returning:
-            result = matched.cache()
-            result.count()
-            table._swap_in(new_df)
-            self._register(table)
-            return self._apply_returning(result, returning)
-        n = matched.count()
-        table._swap_in(new_df)
-        self._register(table)
-        return self.spark.range(1).select(F.lit(n).alias("deleted"))
+        # re-read: a self-referencing FK's SET NULL / CASCADE rewrote
+        # this table's own rows above
+        base = self._live_df(name)
+        matched = base.alias(talias).join(src, F.expr(where), "left_semi")
+        before = Observed(base, rows=F.count(F.lit(1)))
+        after = Observed(
+            before.df.alias(talias).join(src, F.expr(where), "left_anti"),
+            kept=F.count(F.lit(1)),
+        )
+        return self._publish(
+            name, after.df, matched, "deleted", returning,
+            (before, after), lambda m: m["rows"] - m["kept"],
+        )
 
     def _merge_into(
         self, name, t_alias, src_name, src_alias, on_text, when_text
@@ -1947,12 +1981,13 @@ class Catalog:
         matched). Like ``_update_from`` (and unlike PG's arbitrary pick),
         a target row matched by several source rows is REFUSED.
 
-        Distributed shape — the lakehouse merge: ONE equi/theta join for
-        matched candidates, ONE anti-join each way for untouched target
-        rows and not-matched source rows, one union. Clause selection is
-        a column-level CASE cascade over the joined frame (no per-clause
-        re-join, no per-row loop); at 100 TB this is exactly the
-        shuffle-merge a Delta/Iceberg MERGE executes."""
+        Distributed shape — the lakehouse merge: ONE LEFT join of target
+        to source for the matched clauses, ONE anti-join for not-matched
+        source rows, one union. Clause selection is a column-level CASE
+        cascade over the joined frame (no per-clause re-join, no per-row
+        loop); at 100 TB this is exactly the shuffle-merge a Delta/Iceberg
+        MERGE executes. The write observes the guard's counts and the
+        updated, deleted and inserted counts."""
         from otterbrix_spark.operators.dml import ConstraintViolation
 
         table = self.tables[name]
@@ -1980,22 +2015,6 @@ class Catalog:
         ]  # (is_matched, and_cond_text | None, action_text)
         if not clauses:
             raise ValueError(f"MERGE INTO {name}: no WHEN clauses parsed")
-
-        # localCheckpoint pins the target row ids across the dup guard,
-        # the matched pass and the untouched anti-join (same discipline
-        # as _update_from)
-        tagged = base.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-        joined = tagged.alias(t_alias).join(
-            src.alias(src_alias), F.expr(on_text)
-        )
-        if joined.groupBy("__rid").count().filter(F.col("count") > 1).count():
-            raise ConstraintViolation(
-                f"MERGE INTO {name}: a target row matches multiple source "
-                "rows (PG raises 'cannot affect row a second time'; this "
-                "engine refuses the same way)"
-            )
 
         def _fire(kinds):
             """First-match-wins clause index as a CASE cascade column."""
@@ -2034,10 +2053,23 @@ class Catalog:
                 raise ValueError(
                     f"MERGE WHEN MATCHED: unsupported action {action!r}"
                 )
-        fired = joined.withColumn("__fire", _fire(matched_cl))
+        joined, target = self._flagged_join(
+            base, t_alias, src_name, src_alias, on_text
+        )
+        # a target row no source row matched fires no clause (-1)
+        fired = Observed(
+            joined.withColumn(
+                "__fire",
+                F.when(F.col("__hit").isNotNull(), _fire(matched_cl))
+                .otherwise(F.lit(-1)),
+            ),
+            join_rows=F.count(F.lit(1)),
+            updated=F.count_if(F.col("__fire").isin(upd_idx)),
+            deleted=F.count_if(F.col("__fire").isin(del_idx)),
+        )
         matched_after = (
-            fired.filter(~F.col("__fire").isin(del_idx) if del_idx
-                         else F.lit(True))
+            fired.df.filter(~F.col("__fire").isin(del_idx) if del_idx
+                            else F.lit(True))
             .select(
                 "__fire",
                 *[
@@ -2055,10 +2087,10 @@ class Catalog:
         updated = matched_after.filter(
             F.col("__fire").isin(upd_idx) if upd_idx else F.lit(False)
         ).drop("__fire")
-        matched_after = matched_after.drop("__fire")
+        new_df = matched_after.drop("__fire")
 
         not_matched = src.alias(src_alias).join(
-            tagged.alias(t_alias), F.expr(on_text), "left_anti"
+            base.alias(t_alias), F.expr(on_text), "left_anti"
         )
         ins_frames = []
         nm_fired = not_matched.withColumn("__fire", _fire(notm_cl))
@@ -2091,47 +2123,44 @@ class Catalog:
                     ]
                 )
             )
-        inserted = ins_frames[0] if ins_frames else None
-        for extra in (ins_frames or [])[1:]:
-            inserted = inserted.unionByName(extra)
-
-        unchanged = tagged.join(
-            joined.select("__rid"), "__rid", "left_anti"
-        ).drop("__rid")
-        new_df = unchanged.unionByName(matched_after)
+        observed = [target, fired]
         affected = updated
-        if inserted is not None:
-            new_df = new_df.unionByName(inserted)
-            affected = affected.unionByName(inserted)
+        if ins_frames:
+            inserted = Observed(
+                functools.reduce(DataFrame.unionByName, ins_frames),
+                inserted=F.count(F.lit(1)),
+            )
+            observed.append(inserted)
+            new_df = new_df.unionByName(inserted.df)
+            affected = affected.unionByName(inserted.df)
         # stored generated columns recompute over the whole post-merge
         # frame — idempotent for untouched rows, so this is exact
         new_df = self._recompute_generated(name, new_df)
         affected = self._recompute_generated(name, affected)
-        self._validate_new_rows(name, affected, full=new_df)
-        # affected + delete-fired rows as ONE frame: under an EXPLAIN
-        # probe it stays lazy (the plan a plain EXPLAIN MERGE shows is the
-        # real write aggregate, not a one-row literal); the normal txn
-        # path counts it eagerly below (same discipline as _stage_txn)
+        # affected + delete-fired rows: under an EXPLAIN probe the
+        # status is this frame's lazy count (the plan a plain EXPLAIN
+        # MERGE shows is the real write aggregate, not a one-row literal)
         touched = affected.select(F.lit(1).alias("__one"))
         if del_idx:
             touched = touched.unionAll(
-                fired.filter(F.col("__fire").isin(del_idx))
+                fired.df.filter(F.col("__fire").isin(del_idx))
                 .select(F.lit(1).alias("__one"))
             )
-        if self._txn is not None:
-            self._txn[name] = new_df
-            new_df.createOrReplaceTempView(name)
-            if self._explain_probe:
-                # plan-only probe: the lazy aggregate IS the write's plan
-                return touched.agg(F.count("__one").alias("merged"))
-            # eager count: a lazy frame would pin pre-commit files that
-            # COMMIT deletes (ADVICE r8 medium, same as _stage_txn)
-            n = touched.count()
-            return self.spark.range(1).select(F.lit(n).alias("merged"))
-        n = touched.count()
-        table._swap_in(new_df)
-        self._register(table)
-        return self.spark.range(1).select(F.lit(n).alias("merged"))
+
+        def verify(m):
+            if m["join_rows"] != m["target_rows"]:
+                raise ConstraintViolation(
+                    f"MERGE INTO {name}: a target row matches multiple "
+                    "source rows (PG raises 'cannot affect row a second "
+                    "time'; this engine refuses the same way)"
+                )
+            self._validate_new_rows(name, affected, full=new_df)
+
+        return self._publish(
+            name, new_df, touched, "merged", None, observed,
+            lambda m: m["updated"] + m["deleted"] + m.get("inserted", 0),
+            verify,
+        )
 
     # -- constraint enforcement (reference operator_check_constraint /
     # -- operator_fk_check / operator_fk_cascade, routed through SQL DDL) ----
@@ -2162,10 +2191,13 @@ class Catalog:
             if c["kind"] == "check":
                 check_constraint(rows, F.expr(c["expr"]), c["name"])
             elif c["kind"] == "fk":
-                fk_check(
-                    rows, self._live_df(c["parent"]),
-                    c["child_key"], c["parent_key"],
-                )
+                parent = self._live_df(c["parent"])
+                if c["parent"] == name:
+                    # a self-referencing row may point at a row the same
+                    # statement writes (PG checks at statement end)
+                    key = c["parent_key"]
+                    parent = parent.select(key).unionByName(rows.select(key))
+                fk_check(rows, parent, c["child_key"], c["parent_key"])
             elif c["kind"] == "unique":
                 keys = c["cols"]
                 frame = full if full is not None else rows
@@ -2380,10 +2412,7 @@ class Catalog:
                         else:
                             self.sequences[seq] = self._seq_start.get(seq, 1)
                             self._seq_last.pop(seq, None)
-        return self.spark.range(1).select(
-            F.lit(n_rows).alias("truncated"),
-            F.lit(len(doomed)).alias("n_tables"),
-        )
+        return self._status(truncated=n_rows, n_tables=len(doomed))
 
     def _add_constraint(self, name: str, con: dict) -> None:
         """Register a constraint, validating existing rows first (PG
@@ -2652,7 +2681,7 @@ class Catalog:
                 n = matched.count()
                 table._swap_in(new_df)
                 self._register(table)
-                out = self.spark.range(1).select(F.lit(n).alias(verb))
+                out = self._status(**{verb: n})
         # cursor position updates happen only AFTER the statement
         # succeeded, and never under a plain-EXPLAIN probe (the probe
         # must not mutate cursor state or run eager jobs)
@@ -2855,7 +2884,7 @@ class Catalog:
         empty = lo is None or hi < lo
         if verb == "MOVE":
             moved = 0 if empty else hi - lo + 1
-            return self.spark.range(1).select(F.lit(moved).alias("move"))
+            return self._status(move=moved)
         if empty:
             return self.spark.createDataFrame([], cur["schema"])
         out = cur["df"].filter(F.col("__otx_pos").between(lo, hi))
@@ -3076,9 +3105,7 @@ class Catalog:
                     moved, last = moved + 1, row
                 cur["pos"] += moved
                 cur["current"] = last if moved else None
-                return self.spark.range(1).select(
-                    F.lit(moved).alias("move")
-                )
+                return self._status(move=moved)
             else:
                 rows = list(
                     itertools.islice(cur["it"], count)
@@ -3088,9 +3115,7 @@ class Catalog:
                 # track the position for WHERE CURRENT OF (None past end)
                 cur["current"] = rows[-1] if rows else None
             if verb == "MOVE":  # MOVE 0 only (non-zero returned above)
-                return self.spark.range(1).select(
-                    F.lit(0).alias("move")
-                )
+                return self._status(move=0)
             out = self.spark.createDataFrame(rows, cur["schema"])
             if cur.get("out_cols"):
                 out = out.select(*cur["out_cols"])
@@ -4982,7 +5007,7 @@ class Catalog:
             self._register(table)
             if returning:
                 return self._apply_returning(result, returning)
-            return self.spark.range(1).select(F.lit(result).alias("updated"))
+            return self._status(updated=result)
 
         m = _TRUNCATE.match(sql)
         if m and all(
@@ -5010,6 +5035,9 @@ class Catalog:
                 for child_name, new_child in self._fk_on_delete(name, base, cond):
                     self._txn[child_name] = new_child
                     new_child.createOrReplaceTempView(child_name)
+                # a self-referencing FK staged its SET NULL / CASCADE child
+                # frame under this table's own name: delete from that one
+                base = self._txn.get(name, base)
                 new_df, matched = apply_delete(base, cond)
                 return self._stage_txn(name, new_df, matched, "deleted", returning)
             # children first (fk_cascade_delete ordering): restrict checks
@@ -5021,7 +5049,7 @@ class Catalog:
             self._register(table)
             if returning:
                 return self._apply_returning(result, returning)
-            return self.spark.range(1).select(F.lit(result).alias("deleted"))
+            return self._status(deleted=result)
 
         m = self._match_protected(_INSERT_CONFLICT, sql)
         if m and m[0] in self.tables:
@@ -5070,12 +5098,12 @@ class Catalog:
                         rows, returning
                     ).localCheckpoint(eager=True)
                 n = rows.count()  # cheap: counts the pinned checkpoint
-                return self.spark.range(1).select(F.lit(n).alias("inserted"))
+                return self._status(inserted=n)
             dyn.insert(rows)  # schema-on-write: new columns extend the table
             dyn.df().createOrReplaceTempView(name)
             if returning:
                 return self._apply_returning(rows, returning)
-            return self.spark.range(1).select(F.lit(rows.count()).alias("inserted"))
+            return self._status(inserted=rows.count())
 
         m = self._match_protected(_INSERT, sql)
         if m and m[0] in self.tables:
@@ -5251,7 +5279,7 @@ class Catalog:
             self._register(table)
             if returning:
                 return self._apply_returning(result, returning)
-            return self.spark.range(1).select(F.lit(result).alias("inserted"))
+            return self._status(inserted=result)
 
         if _OWNED_DDL_FAMILIES.match(sql):
             raise ValueError(
@@ -5661,7 +5689,7 @@ class Catalog:
                 writer = writer.option("header", header).option("sep", delim)
             writer.save(path)
             n = out.count()
-            return self.spark.range(1).select(F.lit(n).alias("copied"))
+            return self._status(copied=n)
 
         if tname is None or tname not in self.tables:
             raise ValueError(f"COPY: unknown table {tname}")
