@@ -37,6 +37,8 @@ from otterbrix_spark.operators.dml import (
     apply_delete,
     apply_update,
     count_pass,
+    pin,
+    sql_type,
 )
 
 _CREATE_TABLE = re.compile(
@@ -1462,6 +1464,13 @@ class Catalog:
         vals = ", ".join(str(int(n)) for n in counts.values())
         return self.spark.sql(f"VALUES ({vals}) AS t({cols})")
 
+    def _empty_status(self, **label: str) -> DataFrame:
+        """A statement's zero-row status frame (``txn``, ``created``, ...):
+        one non-null STRING column, as ``F.lit`` types it. ``LIMIT 0``
+        plans to an empty local relation, so fetching it runs no job."""
+        ((col, value),) = label.items()
+        return self.spark.sql(f"SELECT :v AS `{col}` LIMIT 0", args={"v": value})
+
     def _stage_txn(
         self,
         name: str,
@@ -1485,7 +1494,7 @@ class Catalog:
             # pre-commit parquet files, which COMMIT's directory swap
             # deletes — collecting the cursor after COMMIT would hit
             # missing files (ADVICE r8, same hazard as the status count)
-            return result.localCheckpoint(eager=True)
+            return pin(result)
         if self._explain_probe:
             # plan-only probe (explain_route): the status frame's plan IS
             # the real matched-rows aggregate (scan+filter+agg), and no
@@ -1668,13 +1677,13 @@ class Catalog:
                         self._default_expr(dfl[f.name], rows, n_cache)
                         if f.name in dfl
                         else F.lit(None)
-                    ).cast(f.dataType).alias(f.name)
+                    ).cast(sql_type(f.dataType)).alias(f.name)
                     for f in base.schema.fields
                 ]
             )
         rows = rows.toDF(*base.columns).select(
             *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
+                F.col(f.name).cast(sql_type(f.dataType)).alias(f.name)
                 for f in base.schema.fields
             ]
         )
@@ -1787,7 +1796,7 @@ class Catalog:
                 )
                 .select(
                     *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        F.col(f.name).cast(sql_type(f.dataType)).alias(f.name)
                         for f in base.schema.fields
                     ]
                 )
@@ -1838,8 +1847,7 @@ class Catalog:
             )
         # pin the affected rows BEFORE the swap: they are lazy plans over
         # the pre-swap files, which _swap_in deletes
-        result = matched.cache()
-        count_pass(result)
+        result = pin(matched)
         table._swap_in(new_df)
         self._register(table)
         return self._apply_returning(result, returning)
@@ -1902,7 +1910,7 @@ class Catalog:
                         .otherwise(F.col(f"{name}.{f.name}"))
                         if f.name in sets else F.col(f"{name}.{f.name}")
                     )
-                    .cast(f.dataType)
+                    .cast(sql_type(f.dataType))
                     .alias(f.name)
                     for f in base.schema.fields
                 ],
@@ -2079,7 +2087,7 @@ class Catalog:
                         )
                         if f.name in col_chain
                         else F.col(f"{t_alias}.{f.name}")
-                    ).cast(f.dataType).alias(f.name)
+                    ).cast(sql_type(f.dataType)).alias(f.name)
                     for f in fields
                 ],
             )
@@ -2118,7 +2126,7 @@ class Catalog:
                         (
                             F.expr(by_col[f.name]) if f.name in by_col
                             else F.lit(None)
-                        ).cast(f.dataType).alias(f.name)
+                        ).cast(sql_type(f.dataType)).alias(f.name)
                         for f in fields
                     ]
                 )
@@ -2907,7 +2915,7 @@ class Catalog:
         )
         if m:
             self.spark.conf.set("spark.sql.session.timeZone", m.group(1))
-            return self.spark.range(0).select(F.lit(m.group(1)).alias("timezone"))
+            return self._empty_status(timezone=m.group(1))
         # any other SET <var>: the reference transformer REFUSES
         # (transformer.cpp:148 — only timezone is supported); falling
         # through to spark.sql would silently mutate Spark session conf
@@ -3025,7 +3033,7 @@ class Catalog:
                     df.localCheckpoint(eager=True).toLocalIterator()
                 )
             self._pg_cursors[name] = entry
-            return self.spark.range(0).select(F.lit(name).alias("declared"))
+            return self._empty_status(declared=name)
         m = re.match(
             r"^\s*(FETCH|MOVE)\s+"
             r"(?:(NEXT|PRIOR|FIRST|LAST|ALL|ABSOLUTE\s+-?\d+"
@@ -3129,7 +3137,7 @@ class Catalog:
                 del self._pg_cursors[name]
             else:
                 raise ValueError(f'cursor "{name}" does not exist')
-            return self.spark.range(0).select(F.lit(name).alias("closed"))
+            return self._empty_status(closed=name)
 
         # transactions (reference components/table/transaction.hpp): DML on
         # managed tables inside BEGIN..COMMIT stages lazy frames per table;
@@ -3147,7 +3155,7 @@ class Catalog:
                 self._txn_created = []
                 self._txn_reseed = []
                 self._txn_meta = self._snapshot_type_meta()
-            return self.spark.range(0).select(F.lit("BEGIN").alias("txn"))
+            return self._empty_status(txn="BEGIN")
 
         # SAVEPOINT / ROLLBACK TO / RELEASE (PG TransactionStmt savepoint
         # forms): a savepoint snapshots the staged state (frames are
@@ -3178,9 +3186,7 @@ class Catalog:
                 len(self._txn_temp_drop),
                 len(self._txn_reseed),
             ))
-            return self.spark.range(0).select(
-                F.lit(m.group(1)).alias("savepoint")
-            )
+            return self._empty_status(savepoint=m.group(1))
         m = re.match(
             r"^\s*ROLLBACK\s+TO\s+(?:SAVEPOINT\s+)?(\w+)\s*;?\s*$",
             sql, re.IGNORECASE,
@@ -3248,7 +3254,7 @@ class Catalog:
                 for b in undone_dyn[name]:
                     if not any(b is k for k in kept):
                         self._release_staged(b)
-            return self.spark.range(0).select(F.lit(sp).alias("rollback_to"))
+            return self._empty_status(rollback_to=sp)
         m = re.match(
             r"^\s*RELEASE\s+(?:SAVEPOINT\s+)?(\w+)\s*;?\s*$",
             sql, re.IGNORECASE,
@@ -3266,7 +3272,7 @@ class Catalog:
             if idx is None:
                 raise ValueError(f"savepoint \"{sp}\" does not exist")
             del self._txn_save[idx:]
-            return self.spark.range(0).select(F.lit(sp).alias("released"))
+            return self._empty_status(released=sp)
         if head == "COMMIT":
             staged, self._txn = self._txn, None
             staged_dyn, self._txn_dyn = self._txn_dyn, None
@@ -3348,7 +3354,7 @@ class Catalog:
                     # dynamic temp tables truncate at commit too (ADVICE
                     # r12: the sweep previously covered self.tables only)
                     self.route(f"DELETE FROM {name}")
-            return self.spark.range(0).select(F.lit("COMMIT").alias("txn"))
+            return self._empty_status(txn="COMMIT")
         if head in ("ROLLBACK", "ABORT"):
             staged, self._txn = self._txn, None
             staged_dyn, self._txn_dyn = self._txn_dyn, None
@@ -3384,7 +3390,7 @@ class Catalog:
             # transactional DDL: tables created inside the txn are discarded
             created, self._txn_created = self._txn_created, []
             self._drop_created(created)
-            return self.spark.range(0).select(F.lit("ROLLBACK").alias("txn"))
+            return self._empty_status(txn="ROLLBACK")
 
         # COPY (PG CopyStmt, reference parsenodes.h PARENTSTMTTYPE_COPY):
         # bulk file <-> table transfer. COPY t FROM 'path' reads the file
@@ -3449,22 +3455,20 @@ class Catalog:
                 self.comments.pop(key, None)
             else:
                 self.comments[key] = text
-            return self.spark.range(0).select(
-                F.lit(target).alias("commented")
-            )
+            return self._empty_status(commented=target)
 
         # CREATE INDEX: no-op accept — Spark has no user indexes; parquet
         # min/max + bucketing play the role (SURVEY.md §2.1)
         if re.match(r"^\s*CREATE\s+(UNIQUE\s+)?INDEX\b", sql, re.IGNORECASE):
-            return self.spark.range(0).select(F.lit("index-noop").alias("created"))
+            return self._empty_status(created="index-noop")
         if re.match(r"^\s*DROP\s+INDEX\b", sql, re.IGNORECASE):
-            return self.spark.range(0).select(F.lit("index-noop").alias("dropped"))
+            return self._empty_status(dropped="index-noop")
 
         # VACUUM / CHECKPOINT: storage-maintenance no-ops on parquet (the
         # reference's operator_vacuum/operator_checkpoint manage its own
         # block store; a lake deployment maps these to OPTIMIZE/VACUUM)
         if re.match(r"^\s*(VACUUM|CHECKPOINT)\b", sql, re.IGNORECASE):
-            return self.spark.range(0).select(F.lit("maintenance-noop").alias("ok"))
+            return self._empty_status(ok="maintenance-noop")
 
         # ALTER TABLE t ADD/DROP CONSTRAINT (reference
         # test_correctness_bugs.cpp:430,502 — CHECK and FK through SQL)
@@ -3494,14 +3498,14 @@ class Catalog:
                     if not any(x is c for c in added)
                 ]
                 raise
-            return self.spark.range(0).select(F.lit(cname).alias("constraint"))
+            return self._empty_status(constraint=cname)
         m = _DROP_CONSTRAINT.match(sql)
         if m:
             name, cname = m.groups()
             self.table_constraints[name] = [
                 c for c in self.table_constraints.get(name, []) if c["name"] != cname
             ]
-            return self.spark.range(0).select(F.lit(cname).alias("dropped"))
+            return self._empty_status(dropped=cname)
 
         # ALTER TABLE t RENAME TO t2 (reference transform_rename.cpp):
         # physical directory move + catalog metadata relocation, FK
@@ -3584,7 +3588,7 @@ class Catalog:
                 for c in cons:
                     if c.get("kind") == "fk" and c.get("parent") == old:
                         c["parent"] = new
-            return self.spark.range(0).select(F.lit(new).alias("renamed"))
+            return self._empty_status(renamed=new)
 
         # ALTER TABLE t ADD COLUMN c type GENERATED ALWAYS AS (expr) STORED:
         # existing rows backfill from the expression (PG rewrites the
@@ -3611,7 +3615,7 @@ class Catalog:
             table.add_column(col, ddl, F.expr(gexpr).cast(ddl))
             self.generated_cols.setdefault(name, {})[col] = gexpr
             self._register(table)
-            return self.spark.range(0).select(F.lit(col).alias("added"))
+            return self._empty_status(added=col)
 
         # ALTER TABLE t ALTER COLUMN c DROP EXPRESSION: the column keeps
         # its current stored values and becomes an ordinary column (PG)
@@ -3631,7 +3635,7 @@ class Catalog:
             del gen[col]
             if not gen:
                 del self.generated_cols[name]
-            return self.spark.range(0).select(F.lit(col).alias("altered"))
+            return self._empty_status(altered=col)
 
         # ALTER TABLE t ADD COLUMN c type / RENAME COLUMN a TO b / DROP COLUMN c
         m = re.match(
@@ -3703,7 +3707,7 @@ class Catalog:
             elif ct and ct["kind"] == "enum":
                 self.enum_uses.setdefault(name, {}).setdefault(
                     base_t, []).append(col)
-            return self.spark.range(0).select(F.lit(col).alias("added"))
+            return self._empty_status(added=col)
         # ALTER TABLE t ALTER [COLUMN] c TYPE type [USING expr] — PG's
         # column rewrite (parsenodes AT_AlterColumnType): the whole column
         # converts, failing loudly when a value cannot (ManagedTable
@@ -3723,7 +3727,7 @@ class Catalog:
                 using=F.expr(using) if using else None,
             )
             self._register(table)
-            return self.spark.range(0).select(F.lit(col).alias("altered"))
+            return self._empty_status(altered=col)
         # ALTER TABLE t ALTER [COLUMN] c SET DEFAULT expr / DROP DEFAULT
         m = re.match(
             r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+ALTER\s+(?:COLUMN\s+)?(\w+)\s+"
@@ -3747,7 +3751,7 @@ class Catalog:
                 self.table_defaults.setdefault(name, {})[col] = dflt
             else:
                 self.table_defaults.get(name, {}).pop(col, None)
-            return self.spark.range(0).select(F.lit(col).alias("altered"))
+            return self._empty_status(altered=col)
         m = re.match(
             r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$",
             sql, re.IGNORECASE,
@@ -3758,7 +3762,7 @@ class Catalog:
             table.rename_column(m.group(2), m.group(3))
             self._column_gone(m.group(1), m.group(2), m.group(3))
             self._register(table)
-            return self.spark.range(0).select(F.lit(m.group(3)).alias("renamed"))
+            return self._empty_status(renamed=m.group(3))
         m = re.match(
             r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+COLUMN\s+(\w+)\s*$",
             sql, re.IGNORECASE,
@@ -3783,7 +3787,7 @@ class Catalog:
             table.drop_column(m.group(2))
             self._column_gone(m.group(1), m.group(2), None)
             self._register(table)
-            return self.spark.range(0).select(F.lit(m.group(2)).alias("dropped"))
+            return self._empty_status(dropped=m.group(2))
 
         # CREATE [OR REPLACE] VIEW: session-scoped logical view, re-resolved
         # per query (reference executor.cpp view path); CREATE MATERIALIZED
@@ -3797,7 +3801,7 @@ class Catalog:
             self.matviews[name] = mv
             self.matview_sql[name] = body
             mv.df().createOrReplaceTempView(name)
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
 
         m = _REFRESH_MATVIEW.match(sql)
         if m:
@@ -3818,7 +3822,7 @@ class Catalog:
                 )
             self.matviews[name].refresh()
             self.matviews[name].df().createOrReplaceTempView(name)
-            return self.spark.range(0).select(F.lit(name).alias("refreshed"))
+            return self._empty_status(refreshed=name)
 
         m = _DROP_VIEW.match(sql)
         if m:
@@ -3836,14 +3840,14 @@ class Catalog:
                 if not (k[1] == name and k[0] in dropped_kinds)
             }
             self.spark.catalog.dropTempView(name)
-            return self.spark.range(0).select(F.lit(name).alias("dropped"))
+            return self._empty_status(dropped=name)
 
         m = _CREATE_VIEW.match(sql)
         if m:
             name, body = m.group(1), m.group(2)
             self.spark.sql(body).createOrReplaceTempView(name)
             self.views[name] = body
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
 
         # CREATE FUNCTION (reference transform_macro.cpp: SQL-body macros,
         # persisted as pg_proc rows by operator_register_udf.cpp —
@@ -3865,14 +3869,14 @@ class Catalog:
                 name, params, _pg_type_to_ddl(returns, self.types), expr
             )
             self._save_functions()
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
         m = _DROP_FUNCTION.match(sql)
         if m:
             name = m.group(1)
             if self.functions.pop(name, None) is not None:
                 self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
                 self._save_functions()
-            return self.spark.range(0).select(F.lit(name).alias("dropped"))
+            return self._empty_status(dropped=name)
 
         # CREATE TYPE (reference T_CreateEnumStmt / T_CompositeTypeStmt,
         # transformer.cpp:75-80; test_collection_sql.cpp:668-684): enum ->
@@ -3888,7 +3892,7 @@ class Catalog:
                 lbl.strip().strip("'") for lbl in _split_top_level(m.group(2))
             ]
             self.types[name] = {"kind": "enum", "labels": labels}
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
         m = re.match(
             r"^\s*CREATE\s+TYPE\s+([\w.]+)\s+AS\s*\((.*)\)\s*$",
             sql, re.IGNORECASE | re.DOTALL,
@@ -3905,7 +3909,7 @@ class Catalog:
             for _, ft in fields:
                 _pg_type_to_ddl(ft, self.types)
             self.types[name] = {"kind": "composite", "fields": fields}
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
         m = re.match(
             r"^\s*DROP\s+TYPE\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*$", sql, re.IGNORECASE
         )
@@ -3925,7 +3929,7 @@ class Catalog:
                     "column(s) depend on it"
                 )
             self.types.pop(tname, None)
-            return self.spark.range(0).select(F.lit(m.group(1)).alias("dropped"))
+            return self._empty_status(dropped=m.group(1))
 
         # ALTER TYPE (PG AlterEnumStmt): ADD VALUE extends the label set
         # (BEFORE/AFTER positions honoured) and REWRITES every dependent
@@ -3947,8 +3951,7 @@ class Catalog:
             new_lbl = m.group(3)
             if new_lbl in et["labels"]:
                 if m.group(2):
-                    return self.spark.range(0).select(
-                        F.lit(new_lbl).alias("added"))
+                    return self._empty_status(added=new_lbl)
                 raise ValueError(
                     f'enum label "{new_lbl}" already exists in {tname}'
                 )
@@ -3964,7 +3967,7 @@ class Catalog:
             else:
                 et["labels"].append(new_lbl)
             self._rewrite_enum_checks(tname)
-            return self.spark.range(0).select(F.lit(new_lbl).alias("added"))
+            return self._empty_status(added=new_lbl)
         m = re.match(
             r"^\s*ALTER\s+TYPE\s+([\w.]+)\s+RENAME\s+VALUE\s+"
             r"'([^']+)'\s+TO\s+'([^']+)'\s*$",
@@ -4002,7 +4005,7 @@ class Catalog:
                         f"UPDATE {t} SET {col} = '{nq}' "
                         f"WHERE {col} = '{oq}'"
                     )
-            return self.spark.range(0).select(F.lit(new_lbl).alias("renamed"))
+            return self._empty_status(renamed=new_lbl)
 
         # CREATE DOMAIN (PG CreateDomainStmt; the parser family the
         # reference embeds — primnodes.h CoerceToDomain): a named scalar
@@ -4080,7 +4083,7 @@ class Catalog:
                 "kind": "domain", "base": base, "default": default,
                 "not_null": not_null, "checks": checks,
             }
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
 
         m = re.match(
             r"^\s*DROP\s+DOMAIN\s+(?:IF\s+EXISTS\s+)?([\w.]+)"
@@ -4107,7 +4110,7 @@ class Catalog:
                     "column(s) depend on it"
                 )
             self.types.pop(name, None)
-            return self.spark.range(0).select(F.lit(name).alias("dropped"))
+            return self._empty_status(dropped=name)
 
         # ALTER DOMAIN (PG AlterDomainStmt): constraint/default changes
         # PROPAGATE to every existing dependent column — ADD CONSTRAINT
@@ -4160,8 +4163,7 @@ class Catalog:
                 chk = {"name": cname, "expr": ma.group(2).strip()}
                 add_everywhere(lambda col: _domain_check_con(col, name, chk))
                 dom["checks"].append(chk)
-                return self.spark.range(0).select(
-                    F.lit(cname).alias("constraint"))
+                return self._empty_status(constraint=cname)
             ma = re.match(
                 r"^DROP\s+CONSTRAINT\s+(IF\s+EXISTS\s+)?(\w+)\s*$",
                 action, re.IGNORECASE,
@@ -4174,8 +4176,7 @@ class Catalog:
                             f'constraint "{cname}" of domain "{name}" '
                             "does not exist"
                         )
-                    return self.spark.range(0).select(
-                        F.lit(cname).alias("dropped"))
+                    return self._empty_status(dropped=cname)
                 dom["checks"] = [
                     c for c in dom["checks"] if c["name"] != cname
                 ]
@@ -4184,15 +4185,14 @@ class Catalog:
                         c for c in self.table_constraints.get(t, [])
                         if c["name"] != f"{col}_{cname}"
                     ]
-                return self.spark.range(0).select(
-                    F.lit(cname).alias("dropped"))
+                return self._empty_status(dropped=cname)
             if re.match(r"^SET\s+NOT\s+NULL\s*$", action, re.IGNORECASE):
                 if not dom["not_null"]:  # PG: already-set is a no-op —
                     # re-instantiating would duplicate the checks
                     add_everywhere(
                         lambda col: _domain_notnull_con(col, name))
                     dom["not_null"] = True
-                return self.spark.range(0).select(F.lit(name).alias("altered"))
+                return self._empty_status(altered=name)
             if re.match(r"^DROP\s+NOT\s+NULL\s*$", action, re.IGNORECASE):
                 dom["not_null"] = False
                 for t, col in dependents():
@@ -4200,7 +4200,7 @@ class Catalog:
                         c for c in self.table_constraints.get(t, [])
                         if c["name"] != f"{col}_{name}_not_null"
                     ]
-                return self.spark.range(0).select(F.lit(name).alias("altered"))
+                return self._empty_status(altered=name)
             ma = re.match(
                 r"^SET\s+DEFAULT\s+(.+)$", action, re.IGNORECASE | re.DOTALL
             )
@@ -4220,7 +4220,7 @@ class Catalog:
                         else:
                             d[col] = new_default
                 dom["default"] = new_default
-                return self.spark.range(0).select(F.lit(name).alias("altered"))
+                return self._empty_status(altered=name)
             raise ValueError(f"unsupported ALTER DOMAIN action: {action!r}")
 
         # sequences: CREATE/DROP SEQUENCE, and statement-level nextval /
@@ -4238,7 +4238,7 @@ class Catalog:
             self.sequences.setdefault(name, start)
             self._seq_step[name] = int(m.group(3) or 1)
             self._seq_start.setdefault(name, start)
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
         m = re.match(r"^\s*DROP\s+SEQUENCE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", sql, re.IGNORECASE)
         if m:
             sname = m.group(1)
@@ -4259,7 +4259,7 @@ class Catalog:
             self._seq_start.pop(sname, None)
             self._seq_step.pop(sname, None)
             self.comments.pop(("S", sname, 0), None)
-            return self.spark.range(0).select(F.lit(sname).alias("dropped"))
+            return self._empty_status(dropped=sname)
         _stores_expr_ddl = re.match(
             r"^\s*(?:CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+)?"
             r"TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[\w.]+\s*\(|ALTER\s+TABLE\b"
@@ -4399,7 +4399,7 @@ class Catalog:
                 self.databases.add(name.lower())
             else:
                 self.databases.discard(name.lower())
-            return self.spark.range(0).select(F.lit(name).alias(verb))
+            return self._empty_status(**{verb: name})
 
         # declarative partitioning (PG PARTITION BY LIST/RANGE/HASH
         # lowered to hive-style directory partitioning): strip the tail
@@ -4421,7 +4421,7 @@ class Catalog:
             )
             self._register(table)
             self._note_created(name)
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
 
         # CREATE TABLE new (LIKE src [INCLUDING DEFAULTS|CONSTRAINTS|ALL]...)
         # (PG TableLikeClause): copy the source's column definitions into a
@@ -4507,7 +4507,7 @@ class Catalog:
             if copied:
                 self.table_constraints[name] = copied
             self._note_created(name)
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
 
         m = _CREATE_TABLE_TYPED.match(sql)
         if m and not m.group(2).strip():
@@ -4521,7 +4521,7 @@ class Catalog:
             self.dynamic[name] = dyn
             dyn.df().createOrReplaceTempView(name)
             self._note_created(name)
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
 
         m = _CREATE_TABLE_TYPED.match(create_sql)
         if m and not m.group(2).strip().upper().startswith("SELECT"):
@@ -4837,7 +4837,7 @@ class Catalog:
                     e: list(cols) for e, cols in enums_used.items()
                 }
             self._note_created(name)
-            return self.spark.range(0).select(F.lit(name).alias("created"))
+            return self._empty_status(created=name)
 
         m = _DROP_TABLE.match(sql)
         if m:
@@ -4870,7 +4870,7 @@ class Catalog:
                 self._txn_temp_drop = [
                     t for t in self._txn_temp_drop if t != name
                 ]
-            return self.spark.range(0).select(F.lit(name).alias("dropped"))
+            return self._empty_status(dropped=name)
 
         # subquery join-source: UPDATE t SET ... FROM (SELECT ...) AS s /
         # DELETE FROM t USING (SELECT ...) AS s — PG allows any derived
@@ -4979,7 +4979,7 @@ class Catalog:
                 }
             sets = _resolve_set_targets(set_texts)
             if self._txn is not None:
-                base = self._txn.get(name, table.df())
+                base = self._txn.get(name, table.df()).alias(name)
                 new_df, matched = apply_update(base, cond, sets)
                 if gen:
                     # recompute from the NEW row values (SET exprs above
@@ -5029,7 +5029,7 @@ class Catalog:
             table = self.tables[name]
             cond = F.expr(where) if where else F.lit(True)
             if self._txn is not None:
-                base = self._txn.get(name, table.df())
+                base = self._txn.get(name, table.df()).alias(name)
                 # FK semantics first: restrict raises before anything stages;
                 # cascades stage the surviving child frames alongside
                 for child_name, new_child in self._fk_on_delete(name, base, cond):
@@ -5037,12 +5037,14 @@ class Catalog:
                     new_child.createOrReplaceTempView(child_name)
                 # a self-referencing FK staged its SET NULL / CASCADE child
                 # frame under this table's own name: delete from that one
-                base = self._txn.get(name, base)
+                base = self._txn.get(name, base).alias(name)
                 new_df, matched = apply_delete(base, cond)
                 return self._stage_txn(name, new_df, matched, "deleted", returning)
             # children first (fk_cascade_delete ordering): restrict checks
             # run eagerly, cascade swaps materialise before the parent delete
-            for child_name, new_child in self._fk_on_delete(name, table.df(), cond):
+            for child_name, new_child in self._fk_on_delete(
+                name, table.df().alias(name), cond
+            ):
                 self.tables[child_name]._swap_in(new_child)
                 self._register(self.tables[child_name])
             result = table.delete(cond, returning=bool(returning))
@@ -5191,7 +5193,7 @@ class Catalog:
                             self._default_expr(dfl[f.name], None, {})
                             if f.name in dfl
                             else F.lit(None)
-                        ).cast(f.dataType).alias(f.name)
+                        ).cast(sql_type(f.dataType)).alias(f.name)
                         for f in table.df().schema.fields
                     ]
                 )
@@ -5250,7 +5252,7 @@ class Catalog:
                             self._default_expr(dfl[f.name], rows, n_cache)
                             if f.name in dfl
                             else F.lit(None)
-                        ).cast(f.dataType).alias(f.name)
+                        ).cast(sql_type(f.dataType)).alias(f.name)
                         for f in table.df().schema.fields
                     ]
                 )
@@ -5267,7 +5269,7 @@ class Catalog:
                 # so a txn INSERT can't silently widen column types via union
                 rows = rows.select(
                     *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        F.col(f.name).cast(sql_type(f.dataType)).alias(f.name)
                         for f in base.schema.fields
                     ]
                 )

@@ -43,7 +43,9 @@ from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType, DataType, MapType, StructType, UserDefinedType,
+)
 
 
 class ConstraintViolation(Exception):
@@ -101,17 +103,58 @@ class Observed:
 
 def count_pass(frame: DataFrame, *observed: Observed) -> dict:
     """Run ``frame`` into Spark's no-op sink: one job, with no shuffle,
-    that fills ``observed`` (built into ``frame``'s plan) and a cached
-    ``frame``'s blocks without writing anything; ``count()`` runs two
-    under adaptive execution. The statement-time pass of a write that is
-    not published now (inside a transaction, or before RETURNING pins its
-    rows)."""
+    that fills ``observed`` (built into ``frame``'s plan) without writing
+    anything; ``count()`` runs two under adaptive execution. The
+    statement-time pass of a write that is not published now (inside a
+    transaction, or before RETURNING pins its rows)."""
     frame.write.format("noop").mode("overwrite").save()
     return _metrics(observed)
 
 
+def pin(frame: DataFrame) -> DataFrame:
+    """Materialise ``frame`` now (one job) into blocks only the returned
+    frame reads. RETURNING rows are a lazy plan over files a swap is about
+    to delete, so they are pinned first. Not ``cache()``: the
+    CacheManager matches a later scan of the same table directory to the
+    cached rows, and a swap is a rename Spark never sees, so the next
+    identical statement would be served the old rows."""
+    return frame.localCheckpoint(eager=True)
+
+
 def _metrics(observed) -> dict:
     return {k: v for o in observed for k, v in o.get().items()}
+
+
+def sql_type(dt: DataType) -> str | DataType:
+    """``dt`` as SQL type text, for ``Column.cast``. A cast to a
+    ``DataType`` object costs py4j round trips on every call (the active
+    session, then parsing the type's JSON); a cast to type text is one.
+    A type the text cannot spell exactly stays an object: a user-defined
+    type, or a nested non-nullable element or field metadata."""
+    text = _type_text(dt)
+    return dt if text is None else text
+
+
+def _type_text(dt: DataType) -> str | None:
+    if isinstance(dt, UserDefinedType):
+        return None
+    if isinstance(dt, ArrayType):
+        inner = _type_text(dt.elementType) if dt.containsNull else None
+        return None if inner is None else f"ARRAY<{inner}>"
+    if isinstance(dt, MapType):
+        k, v = _type_text(dt.keyType), _type_text(dt.valueType)
+        if k is None or v is None or not dt.valueContainsNull:
+            return None
+        return f"MAP<{k}, {v}>"
+    if isinstance(dt, StructType):
+        fields = []
+        for f in dt.fields:
+            inner = _type_text(f.dataType)
+            if inner is None or not f.nullable or f.metadata:
+                return None
+            fields.append("`" + f.name.replace("`", "``") + "`: " + inner)
+        return f"STRUCT<{', '.join(fields)}>"
+    return dt.simpleString()
 
 
 def _same_columns(a: StructType, b: StructType) -> bool:
@@ -251,7 +294,7 @@ class ManagedTable:
         if self.exists():
             rows = rows.select(
                 *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
+                    F.col(f.name).cast(sql_type(f.dataType)).alias(f.name)
                     for f in self.df().schema.fields
                 ]
             )
@@ -343,7 +386,9 @@ class ManagedTable:
         the WHERE against updated columns). One distributed projection, no
         shuffle.
         """
-        flagged = flag_update(self.df(), cond, set_exprs)
+        # the table's name qualifies the target row, so a correlated
+        # subquery in WHERE can reference it (``t.id``)
+        flagged = flag_update(self.df().alias(self.name), cond, set_exprs)
         seen = Observed(flagged, updated=F.count_if(F.col("_matched")))
         new_df = seen.df.drop("_matched")
         matched = flagged.filter(F.col("_matched")).drop("_matched")
@@ -360,8 +405,7 @@ class ManagedTable:
 
         if returning:
             verify(None)
-            result = matched.cache()
-            count_pass(result)
+            result = pin(matched)
             self._swap_in(new_df)
             return result
         return self._swap_in(new_df, seen, verify=verify)["updated"]
@@ -416,13 +460,12 @@ class ManagedTable:
         ``~cond`` (which would silently drop NULL-predicate rows).
         """
         if returning:
-            new_df, matched = apply_delete(self.df(), cond)
-            result = matched.cache()
-            count_pass(result)
+            new_df, matched = apply_delete(self.df().alias(self.name), cond)
+            result = pin(matched)
             self._swap_in(new_df)
             return result
         # deleted = rows before - rows after, both taken by the write
-        before = Observed(self.df(), rows=F.count(F.lit(1)))
+        before = Observed(self.df().alias(self.name), rows=F.count(F.lit(1)))
         after = Observed(apply_delete(before.df, cond)[0], kept=F.count(F.lit(1)))
         m = self._swap_in(after.df, before, after)
         return m["rows"] - m["kept"]
@@ -458,7 +501,7 @@ def flag_update(
             (
                 F.when(F.col("_matched"), set_exprs[f.name])
                 .otherwise(F.col(f.name))
-                .cast(f.dataType)
+                .cast(sql_type(f.dataType))
                 .alias(f.name)
                 if f.name in set_exprs
                 else F.col(f.name)

@@ -18,6 +18,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Entries in Spark's JVM-wide cache of compiled whole-stage classes
+# (``spark.sql.codegen.cache.maxEntries``, default 100). Measured at sf0.1
+# on 4 cores: one round of the 12 ``bench=True`` gates generates about 210
+# distinct classes, so at 100 entries the shuffled round-robin missed on
+# nearly every execution and recompiled 140-180 classes a round, then ran
+# freshly loaded classes the JIT had not yet compiled: a round took
+# 10.5-11.9 s, against 5.1-6.8 s at 2000, where a repeated round compiles
+# none. A full sweep of all 568 registry gates (``scripts/plan_sweep.py``'s
+# set, sf0.01, noop sink) generates about 7000 classes; the cache does not
+# try to hold them: a retained class costs about 18 KB of metaspace (800
+# classes of small aggregate stages, after a full GC), and a statement
+# stream whose literals vary (Spark inlines primitive literals into the
+# generated code) fills any cache to its cap, so 2000 bounds that at about
+# 36 MB.
+# A static SQL conf, read when the JVM first generates code: it is set in
+# the builder below and cannot be applied to a session built elsewhere.
+CODEGEN_CACHE_ENTRIES = 2000
+
+
 def _default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus:
@@ -63,6 +82,7 @@ def get_spark(
         # test_sql_features.cpp TIME comparisons) map to Spark 4.1's TIME
         # type, which ships behind this flag
         .config("spark.sql.timeType.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
     )
     for key, value in (extra_conf or {}).items():
@@ -77,7 +97,10 @@ def configure_session(spark: SparkSession) -> None:
 
     The correctness driver constructs its own SparkSession; every query entry
     point calls this so behaviour does not depend on who built the session.
-    Only dynamic (session-mutable) SQL configs belong here.
+    Only dynamic (session-mutable) SQL configs belong here: static ones such
+    as ``spark.sql.codegen.cache.maxEntries`` (``CODEGEN_CACHE_ENTRIES``)
+    keep whatever value the session's builder gave them, so a session built
+    elsewhere keeps Spark's 100-entry generated-code cache.
     """
     for key, value in (
         ("spark.sql.session.timeZone", "UTC"),

@@ -6,7 +6,9 @@ write itself, then runs its checks and commits (stage → verify → commit).
 These tests pin that the observed counts equal a ``count()`` oracle and
 DuckDB's, that a refused write leaves the table's files as they were with
 no staged directory behind, how many Spark jobs each write shape runs, and
-two self-referencing foreign-key cases.
+two self-referencing foreign-key cases. Also: RETURNING rows of repeated
+statements, zero-row status frames, correlated subqueries naming the
+target table, and the type text write paths cast to.
 """
 
 from __future__ import annotations
@@ -16,9 +18,11 @@ import uuid
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from otterbrix_spark.engine import Engine
-from otterbrix_spark.operators.dml import ConstraintViolation
+from otterbrix_spark.operators.dml import ConstraintViolation, sql_type
 
 _SETUP = (
     "CREATE TABLE t (k int, v int)",
@@ -229,6 +233,25 @@ def test_status_frame_runs_no_job(spark, eng):
     assert cur.df.schema.simpleString() == "struct<deleted:int>"
 
 
+def test_zero_row_status_fetch_runs_no_job(spark, eng):
+    """BEGIN, COMMIT and DDL answer with a zero-row frame named for the
+    verb; fetching it runs no Spark job."""
+    eng.execute_sql("CREATE TABLE t (k int, v int)")
+    for sql, col in (
+        ("BEGIN", "txn"),
+        ("INSERT INTO t VALUES (1, 10)", None),
+        ("COMMIT", "txn"),
+        ("CREATE INDEX t_k ON t (k)", "created"),
+    ):
+        cur = eng.execute_sql(sql)
+        if col is None:
+            continue
+        rows, n = _jobs(spark, cur.fetchall)
+        assert rows == [] and n == 0, sql
+        assert cur.df.schema == StructType([StructField(col, StringType(), False)])
+    assert _rows(eng, "t") == [(1, 10)]
+
+
 @pytest.mark.parametrize(
     "sql, ceiling",
     [
@@ -296,3 +319,109 @@ def test_multirow_insert_may_reference_its_own_rows(eng):
     with pytest.raises(ConstraintViolation, match="dangling"):
         eng.execute_sql("INSERT INTO emp VALUES (4, 3), (5, 99)")
     assert len(_rows(eng, "emp")) == 3
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        ("UPDATE t SET v = v + 1 WHERE k = 1 RETURNING v", [11, 12, 13]),
+        (
+            "UPDATE t SET v = t.v + s.v FROM s WHERE t.k = s.k AND t.k = 2 "
+            "RETURNING v",
+            [25, 30, 35],
+        ),
+    ],
+    ids=["update", "update-from"],
+)
+def test_returning_rows_follow_each_update(spark, both, sql, want):
+    """RETURNING shows each statement's own rows. Pinned with ``cache()``,
+    the next identical statement was served the first one's rows: the
+    CacheManager matches a scan by its directory, and the swap that
+    replaces the files is a rename Spark never sees."""
+    eng, _ = both
+    before = _cached_entries(spark)
+    got = [eng.execute_sql(sql).fetchall() for _ in want]
+    assert got == [[(v,)] for v in want]
+    assert _cached_entries(spark) == before
+
+
+def test_returning_rows_follow_each_delete(spark, eng):
+    eng.execute_sql("CREATE TABLE t (k int, v int)")
+    before = _cached_entries(spark)
+    got = []
+    for v in (30, 31, 32):
+        eng.execute_sql(f"INSERT INTO t VALUES (3, {v})")
+        got.append(eng.execute_sql("DELETE FROM t WHERE k = 3 RETURNING v").fetchall())
+    assert got == [[(30,)], [(31,)], [(32,)]]
+    assert _cached_entries(spark) == before
+
+
+_EMP = (
+    "CREATE TABLE emp (id int, mgr int, v int)",
+    "INSERT INTO emp VALUES (1, NULL, 10), (2, 1, 20), (3, 1, 5), "
+    "(4, 2, 1), (5, 2, 30)",
+)
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "UPDATE emp SET v = v * 2 WHERE v < "
+        "(SELECT max(e2.v) FROM emp e2 WHERE e2.mgr = emp.id)",
+        "DELETE FROM emp WHERE v > "
+        "(SELECT min(e2.v) FROM emp e2 WHERE e2.mgr = emp.id)",
+    ],
+    ids=["update", "delete"],
+)
+def test_correlated_subquery_on_target_name(eng, sql, txn):
+    """A subquery in WHERE may reference the target row by the table's
+    name, as in PG; the rows match DuckDB's."""
+    con = duckdb.connect()
+    for stmt in _EMP:
+        eng.execute_sql(stmt)
+        con.execute(stmt)
+    eng.execute_sql(f"BEGIN; {sql}; COMMIT" if txn else sql)
+    con.execute(sql)
+    assert _rows(eng, "emp") == _rows(con, "emp")
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "ddl",
+    [
+        "tinyint", "smallint", "int", "bigint", "float", "double",
+        "decimal(12,2)", "decimal(38,0)", "boolean", "string", "binary",
+        "date", "timestamp", "timestamp_ntz", "time(6)",
+        "interval day to second", "interval year to month",
+        "string collate UNICODE_CI", "array<int>", "map<string,bigint>",
+        "struct<a:int,`b c`:array<string>,`d``e`:struct<x:double>>",
+        "array<struct<k:string,v:map<int,decimal(10,3)>>>",
+    ],
+)
+def test_cast_type_text_spells_the_type(spark, ddl):
+    """Write paths cast to ``sql_type(f.dataType)``: the text must name
+    exactly the type the schema holds."""
+    dt = spark.range(1).select(F.lit(None).cast(ddl).alias("c")).schema[0].dataType
+    text = sql_type(dt)
+    assert isinstance(text, str), dt
+    got = spark.range(1).select(F.lit(None).cast(text).alias("c")).schema[0].dataType
+    assert got == dt
+
+
+def test_cast_type_text_keeps_what_text_cannot_spell():
+    """Types SQL text cannot spell exactly stay ``DataType`` objects."""
+    from pyspark.ml.linalg import VectorUDT
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    for dt in (
+        VectorUDT(),
+        ArrayType(IntegerType(), containsNull=False),
+        StructType([StructField("a", IntegerType(), nullable=False)]),
+        StructType([StructField("a", IntegerType(), metadata={"comment": "x"})]),
+    ):
+        assert sql_type(dt) is dt
