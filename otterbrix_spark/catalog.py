@@ -1412,21 +1412,27 @@ class Catalog:
             ]
 
     @staticmethod
-    def _match_protected(rx: "re.Pattern", sql: str):
+    def _match_protected(rx: "re.Pattern", sql: str, nested: bool = False):
         """Match a DML regex over STRING-PROTECTED text and return the
         restored groups (or None). Keywords like RETURNING / WHERE / SET
         inside a string literal must never act as clause boundaries —
         matching on the protected form (literals replaced by opaque
         tokens) makes that structural, and restoring each captured group
-        independently hands the handlers byte-identical clause text."""
-        from otterbrix_spark.dialect import _protect_strings, _restore_strings
+        independently hands the handlers byte-identical clause text.
+        With ``nested``, parenthesised groups are protected the same way,
+        so a subquery's own FROM / WHERE cannot end a clause either."""
+        from otterbrix_spark.dialect import (
+            _protect_groups, _protect_strings, _restore_groups, _restore_strings,
+        )
 
         body, lits = _protect_strings(sql)
+        body, groups = _protect_groups(body) if nested else (body, [])
         m = rx.match(body)
         if m is None:
             return None
         return tuple(
-            _restore_strings(g, lits) if isinstance(g, str) else g
+            _restore_strings(_restore_groups(g, groups), lits)
+            if isinstance(g, str) else g
             for g in m.groups()
         )
 
@@ -4919,21 +4925,20 @@ class Catalog:
         if m and m[0] in self.tables:
             return self._merge_into(*m)
 
-        m = self._match_protected(_UPDATE_FROM, sql)
+        # subqueries in SET or WHERE are protected: their FROM / WHERE
+        # are not the statement's
+        m = self._match_protected(_UPDATE_FROM, sql, nested=True)
         if (
             m
             and m[0] in self.tables
-            # guard against a plain UPDATE whose WHERE contains a
-            # subquery (`... WHERE id IN (SELECT .. FROM u WHERE ..)`) —
-            # there the regex's non-greedy SET slice swallows the outer
-            # WHERE and splits inside the subquery, leaving unbalanced
-            # parens / a stray WHERE in the captured set-clause
-            and m[1].count("(") == m[1].count(")")
+            # a plain UPDATE with a top-level FROM in its WHERE
+            # (`WHERE a IS DISTINCT FROM b`): the SET slice swallowed the
+            # WHERE
             and not re.search(r"\bWHERE\b", m[1], re.IGNORECASE)
         ):
             return self._update_from(*m)
 
-        m = self._match_protected(_UPDATE, sql)
+        m = self._match_protected(_UPDATE, sql, nested=True)
         if m and m[0] in self.tables:
             name, set_clause, where, returning = m
             table = self.tables[name]

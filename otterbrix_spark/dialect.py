@@ -42,6 +42,29 @@ def _restore_strings(sql: str, literals: list[str]) -> str:
     return re.sub("\x00(\\d+)\x00", unstash, sql)
 
 
+def _protect_groups(body: str) -> tuple[str, list[str]]:
+    """Stash each outermost parenthesised group of ``body`` (string
+    literals already stashed) as an opaque token, so a clause regex sees
+    only the statement's own keywords, never a subquery's WHERE or FROM.
+    From an unbalanced '(' on, the text is left as it is."""
+    groups: list[str] = []
+    out, i = [], 0
+    while (j := body.find("(", i)) >= 0:
+        try:
+            end = _scan_balanced(body, j)
+        except ValueError:
+            break
+        groups.append(body[j:end])
+        out.append(f"{body[i:j]}\x01{len(groups) - 1}\x01")
+        i = end
+    out.append(body[i:])
+    return "".join(out), groups
+
+
+def _restore_groups(sql: str, groups: list[str]) -> str:
+    return re.sub("\x01(\\d+)\x01", lambda m: groups[int(m.group(1))], sql)
+
+
 def _lit_text(token: str) -> str:
     """'abc' -> abc (unescape doubled quotes)."""
     return token[1:-1].replace("''", "'")

@@ -189,7 +189,20 @@ class ManagedTable:
     written columns equal the pre-write relation's, and drop it otherwise
     (ALTER ADD/DROP/RENAME/TYPE), so the next read re-infers. A write by
     another engine or process changes the listing, so the next ``df()``
-    re-infers and sees it."""
+    re-infers and sees it.
+
+    One partition for a small table: when the data files in the token
+    total no more than ``spark.sql.files.openCostInBytes`` (Spark's own
+    per-file open cost, 4 MB by default), the scan is ``coalesce(1)``.
+    Spark charges every file that open cost when it packs files into
+    splits, so a table of a few small files otherwise reads as one
+    partition per file, and a GROUP BY, global aggregate or join over it
+    plans an Exchange that adaptive execution runs as a job of its own.
+    A one-partition child satisfies the clustered and all-tuples
+    distributions, so the planner drops that Exchange; ``coalesce`` is no
+    shuffle, and filters, partition pruning and column pruning still push
+    through it into the scan. A rewrite of such a table writes one file.
+    Larger tables keep Spark's split."""
 
     def __init__(
         self,
@@ -208,12 +221,14 @@ class ManagedTable:
         self.schema_ddl = schema_ddl
         # (version token, frame) of the last scan; see the class docstring
         self._scan: "tuple[tuple, DataFrame] | None" = None
+        # spark.sql.files.openCostInBytes, read on the first scan
+        self._one_split_bytes: int | None = None
 
     # -- scan ---------------------------------------------------------------
     def df(self) -> DataFrame:
         token, scan = self._version(), self._scan
         if scan is None or scan[0] != token:
-            scan = self._scan = (token, self._read())
+            scan = self._scan = (token, self._read(token))
         return scan[1]
 
     def _version(self) -> tuple:
@@ -230,19 +245,32 @@ class ManagedTable:
                 files.append((rel, st.st_size, st.st_mtime_ns))
         return (self.path, tuple(sorted(files)))
 
-    def _read(self, schema: StructType | None = None) -> DataFrame:
-        """A fresh scan: with the pinned DDL schema for a partitioned
-        table, else with ``schema`` when known, else inferred (one job)."""
+    def _read(self, token: tuple, schema: StructType | None = None) -> DataFrame:
+        """A fresh scan of the files in ``token``: with the pinned DDL
+        schema for a partitioned table, else with ``schema`` when known,
+        else inferred (one job); one partition when the table is small
+        (see the class docstring)."""
         if self.partition_cols and self.schema_ddl:
             schema = StructType.fromDDL(self.schema_ddl)
-            return (
+            frame = (
                 self.spark.read.schema(schema)
                 .parquet(self.path)
                 .select(*[f.name for f in schema.fields])
             )
-        if schema is None:
-            return self.spark.read.parquet(self.path)
-        return self.spark.read.schema(schema).parquet(self.path)
+        elif schema is None:
+            frame = self.spark.read.parquet(self.path)
+        else:
+            frame = self.spark.read.schema(schema).parquet(self.path)
+        if self._one_split_bytes is None:
+            conf = self.spark._jsparkSession.sessionState().conf()
+            self._one_split_bytes = conf.filesOpenCostInBytes()
+        # Spark's file index skips names starting with "_" or "." (_SUCCESS,
+        # checksum files)
+        data_bytes = sum(
+            size for rel, size, _ in token[1]
+            if not os.path.basename(rel).startswith(("_", "."))
+        )
+        return frame.coalesce(1) if data_bytes <= self._one_split_bytes else frame
 
     def _rebind(self, written: StructType | None) -> None:
         """After this table's own write, under its write lock: keep the
@@ -253,7 +281,8 @@ class ManagedTable:
         if before is None or written is None or not _same_columns(before, written):
             self._scan = None
         else:
-            self._scan = (self._version(), self._read(before))
+            token = self._version()
+            self._scan = (token, self._read(token, before))
 
     def exists(self) -> bool:
         return os.path.isdir(self.path) and any(

@@ -35,15 +35,24 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 _Q = 10000.0
 
 
+def _floor_to(col: str, unit_us: int) -> Column:
+    """``col`` rounded down to a multiple of ``unit_us``, exact in BIGINT.
+    Floor, like Python's ``//`` on the driver side: SQL ``DIV`` truncates
+    toward zero, so before 1970 it would put a time in the bucket above
+    the one the driver computes for it."""
+    return F.expr(f"{col} - pmod({col}, {unit_us})")
+
+
 def _bucketed(events: DataFrame, bucket_hours: int) -> DataFrame:
     bucket_us = bucket_hours * 3_600_000_000
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return events.withColumn("bucket_us", F.expr(f"unix_micros(CAST(ts AS TIMESTAMP)) DIV {bucket_us} * {bucket_us}"))
+    return events.withColumn(
+        "bucket_us", _floor_to("unix_micros(CAST(ts AS TIMESTAMP))", bucket_us)
+    )
 
 
 def _aggregate(bucketed: DataFrame, group_col: str = "event_type") -> DataFrame:
@@ -94,10 +103,7 @@ class ContinuousAggregate:
         return int(bucket) // self.chunk_us * self.chunk_us
 
     def _chunked(self, agg: DataFrame) -> DataFrame:
-        return agg.withColumn(
-            "chunk_us",
-            F.expr(f"bucket_us DIV {self.chunk_us} * {self.chunk_us}"),
-        )
+        return agg.withColumn("chunk_us", _floor_to("bucket_us", self.chunk_us))
 
     def build(self, source: DataFrame) -> None:
         """Full (re)build: one aggregate over the source, written
@@ -222,9 +228,7 @@ class CoarsenedAggregate:
 
     def _coarsen(self, fine: DataFrame) -> DataFrame:
         bucket_us = self.bucket_hours * 3_600_000_000
-        day = F.expr(
-            f"CAST(bucket_us AS BIGINT) DIV {bucket_us} * {bucket_us}"
-        )
+        day = _floor_to("CAST(bucket_us AS BIGINT)", bucket_us)
         return (
             fine.groupBy(day.alias("coarse_us"), "event_type")
             .agg(F.sum("n").alias("n"), F.sum("qsum").alias("qsum"))

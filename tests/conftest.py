@@ -22,7 +22,6 @@ _SLOW_MODULES = {
     "test_sql_dml",
     "test_generated_columns",
     "test_streaming",
-    "test_rollup",
     "test_constraints_sql",
     "test_txn_state_r13",
     "test_txn_type_ddl",

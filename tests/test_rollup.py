@@ -5,11 +5,16 @@ the source scan."""
 
 from __future__ import annotations
 
+import math
 import os
+import tempfile
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from otterbrix_spark.operators.rollup import ContinuousAggregate, _aggregate, _bucketed
+from otterbrix_spark.operators.rollup import (
+    CoarsenedAggregate, ContinuousAggregate, _aggregate, _bucketed,
+)
 from otterbrix_spark.sources.registry import load_table
 
 
@@ -161,3 +166,58 @@ def test_refresh_composes_with_mvcc_snapshot(spark, sf_dir, tmp_path):
     # idempotent: nothing new since v3
     ver_again, touched_again = ca.refresh_from(vt, base_version=v3)
     assert ver_again == v3 and touched_again == []
+
+
+_HOUR = 3_600_000_000
+
+
+def _expected(rows, bucket_us: int) -> dict:
+    """The full aggregate computed on the driver: buckets floor, as a
+    time bucket does on either side of 1970."""
+    out: dict = {}
+    for us, et, value in rows:
+        n, q = out.get((us // bucket_us * bucket_us, et), (0, 0))
+        out[(us // bucket_us * bucket_us, et)] = (n + 1, q + math.floor(value * 10000.0))
+    return out
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            # three days before 1970 to one day after, so buckets and day
+            # chunks fall on both sides of zero
+            st.integers(-3 * 24 * _HOUR, 24 * _HOUR),
+            st.sampled_from(["view", "click"]),
+            st.integers(0, 64).map(lambda i: i / 8),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    cut=st.floats(0, 1),
+)
+@settings(max_examples=12, deadline=None)
+def test_build_and_refresh_equal_full_aggregate_before_1970(spark, rows, cut):
+    """Build over a prefix of the rows, then refresh with the rest: the
+    hourly rollup and the daily rollup refreshed from it equal the full
+    aggregate, for timestamps before and after 1970."""
+    k = max(1, int(len(rows) * cut))
+
+    def frame(rs):
+        return spark.createDataFrame(
+            rs, "us long, event_type string, value double"
+        ).withColumn("ts", F.timestamp_micros("us"))
+
+    with tempfile.TemporaryDirectory(prefix="rollup-") as base:
+        hourly = ContinuousAggregate(spark, os.path.join(base, "h"), bucket_hours=1)
+        daily = CoarsenedAggregate(spark, os.path.join(base, "d"), bucket_hours=24)
+        hourly.build(frame(rows[:k]))
+        daily.build(hourly.df())
+        touched = hourly.refresh(source=frame(rows), delta=frame(rows[k:]))
+        daily.refresh(hourly.df(), touched)
+
+        assert _as_dict(hourly.df()) == _expected(rows, _HOUR)
+        got_daily = {
+            (r["coarse_us"], r["event_type"]): (r["n"], r["qsum"])
+            for r in daily.df().collect()
+        }
+        assert got_daily == _expected(rows, 24 * _HOUR)

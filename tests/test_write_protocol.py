@@ -8,7 +8,8 @@ DuckDB's, that a refused write leaves the table's files as they were with
 no staged directory behind, how many Spark jobs each write shape runs, and
 two self-referencing foreign-key cases. Also: RETURNING rows of repeated
 statements, zero-row status frames, correlated subqueries naming the
-target table, and the type text write paths cast to.
+target table, SET subqueries with their own WHERE, and the type text
+write paths cast to.
 """
 
 from __future__ import annotations
@@ -387,6 +388,34 @@ def test_correlated_subquery_on_target_name(eng, sql, txn):
         con.execute(stmt)
     eng.execute_sql(f"BEGIN; {sql}; COMMIT" if txn else sql)
     con.execute(sql)
+    assert _rows(eng, "emp") == _rows(con, "emp")
+    con.close()
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "UPDATE emp SET v = (SELECT sum(e2.v) FROM emp e2 WHERE e2.id <= emp.id) "
+        "WHERE emp.id > 2",
+        "UPDATE emp SET v = (SELECT count(*) FROM emp e2 WHERE e2.mgr = emp.id), "
+        "mgr = (SELECT min(e2.id) FROM emp e2) WHERE emp.v >= 10 "
+        "RETURNING id, v",
+    ],
+    ids=["sum", "count-returning"],
+)
+def test_update_set_subquery_with_its_own_where(eng, sql, txn):
+    """A SET subquery's own FROM and WHERE do not end the SET list: the
+    statement's clauses are found outside parentheses. Rows match
+    DuckDB's."""
+    con = duckdb.connect()
+    for stmt in _EMP:
+        eng.execute_sql(stmt)
+        con.execute(stmt)
+    got = eng.execute_sql(f"BEGIN; {sql}; COMMIT" if txn else sql).fetchall()
+    want = con.execute(sql).fetchall()
+    if "RETURNING" in sql and not txn:
+        assert sorted(map(tuple, got)) == sorted(want)
     assert _rows(eng, "emp") == _rows(con, "emp")
     con.close()
 
