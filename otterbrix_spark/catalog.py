@@ -34,9 +34,10 @@ from otterbrix_spark.operators.dml import (
     ManagedTable,
     MaterializedView,
     Observed,
-    apply_delete,
-    apply_update,
     count_pass,
+    flag_update,
+    flagged_write,
+    metrics,
     pin,
     sql_type,
 )
@@ -267,10 +268,12 @@ _INSERT = re.compile(
 # PG upsert (reference dialect family: INSERT ... ON CONFLICT <arbiter>
 # DO NOTHING | DO UPDATE SET ...): the arbiter column list must name a
 # declared PRIMARY KEY / UNIQUE constraint, exactly as PG requires an
-# arbiter index
+# arbiter index. Matched with parenthesised groups protected
+# (``Catalog._match_protected(..., nested=True)``): the arbiter list is
+# one such group, and a SET subquery's own WHERE is hidden in another
 _INSERT_CONFLICT = re.compile(
     r"^\s*INSERT\s+INTO\s+([\w.]+)\s+(.*?)\s+ON\s+CONFLICT\s*"
-    r"(?:\(\s*([\w\s,]+?)\s*\)|ON\s+CONSTRAINT\s+(\w+))?\s*DO\s+"
+    r"(?:(\x01\d+\x01)|ON\s+CONSTRAINT\s+(\w+))?\s*DO\s+"
     r"(NOTHING|UPDATE\s+SET\s+.*?)(?:\s+WHERE\s+(.+?))?"
     r"(?:\s+RETURNING\s+(.+?))?\s*$",
     re.IGNORECASE | re.DOTALL,
@@ -1477,44 +1480,114 @@ class Catalog:
         ((col, value),) = label.items()
         return self.spark.sql(f"SELECT :v AS `{col}` LIMIT 0", args={"v": value})
 
-    def _stage_txn(
-        self,
-        name: str,
-        new_df: DataFrame,
-        matched: DataFrame,
-        verb: str,
-        returning,
-        n: int | None = None,
-    ) -> DataFrame:
-        """Record a staged frame for ``name`` inside the active transaction
-        and re-register the temp view so in-transaction reads see the
-        uncommitted state (read-your-writes). ``n`` is the affected-row
-        count when the caller already took it."""
-        self._txn[name] = new_df
-        new_df.createOrReplaceTempView(name)
-        if returning:
-            result = self._apply_returning(matched, returning)
-            if self._explain_probe:
-                return result  # plan-only probe: stay lazy, zero jobs
-            # pin the RETURNING rows NOW: they are a lazy plan over the
-            # pre-commit parquet files, which COMMIT's directory swap
-            # deletes — collecting the cursor after COMMIT would hit
-            # missing files (ADVICE r8, same hazard as the status count)
-            return pin(result)
-        if self._explain_probe:
-            # plan-only probe (explain_route): the status frame's plan IS
-            # the real matched-rows aggregate (scan+filter+agg), and no
-            # job runs at statement time
-            return matched.agg(F.count(F.lit(1)).alias(verb))
-        # normal txn path: count EAGERLY — a lazy count would pin the
-        # pre-commit parquet files that COMMIT's commit_staged() deletes,
-        # so collecting the status cursor after COMMIT threw
-        # FileNotFoundException (ADVICE r8 medium). matched is an
-        # immutable captured plan, so counting now equals counting later.
-        if n is None:
-            seen = Observed(matched, n=F.count(F.lit(1)))
-            n = count_pass(seen.df, seen)["n"]
-        return self._status(**{verb: n})
+    def _replace_rows(self, name: str, frame: DataFrame) -> None:
+        """Make ``frame`` the rows of ``name``: staged in the active
+        transaction, with the temp view re-registered so in-transaction
+        reads see it (read-your-writes), or else swapped in now."""
+        if self._txn is not None:
+            self._txn[name] = frame
+            frame.createOrReplaceTempView(name)
+        else:
+            self.tables[name]._swap_in(frame)
+            self._register(self.tables[name])
+
+    def _insert_rows(self, name: str, body: str) -> DataFrame:
+        """The rows an INSERT body adds to ``name``: ``[(cols)]
+        [OVERRIDING SYSTEM|USER VALUE] VALUES ... | SELECT ... | DEFAULT
+        VALUES``. Sources match the target columns by position (PG); with
+        no column list they target the non-generated columns, and a short
+        row fills the leading ones. Omitted columns take their declared
+        DEFAULT (else NULL), every column is cast to the table's type, and
+        stored generated columns compute last, from the defaulted row (PG
+        ExecComputeStoredGenerated). Shared by INSERT and INSERT ... ON
+        CONFLICT."""
+        fields = self.tables[name].df().schema.fields
+        columns = [f.name for f in fields]
+        body, cols = body.strip(), None
+        mcols = re.match(
+            r"^\(\s*(\w+(?:\s*,\s*\w+)*)\s*\)\s*(.+)$", body, re.DOTALL
+        )
+        if mcols:
+            cols = [c.strip() for c in mcols.group(1).split(",")]
+            body = mcols.group(2).strip()
+        # PG OVERRIDING clause (between the column list and the source):
+        # SYSTEM VALUE lets explicit values reach GENERATED ALWAYS identity
+        # columns; USER VALUE discards supplied values for identity
+        # columns in favour of their sequence
+        overriding = None
+        mov = re.match(
+            r"^OVERRIDING\s+(SYSTEM|USER)\s+VALUE\s+(.+)$",
+            body, re.IGNORECASE | re.DOTALL,
+        )
+        if mov:
+            overriding, body = mov.group(1).upper(), mov.group(2).strip()
+        default_values = re.fullmatch(r"DEFAULT\s+VALUES", body, re.IGNORECASE)
+        values = body.upper().startswith("VALUES")
+        targets = cols if cols is not None else columns
+        gen = set(self.generated_cols.get(name, {}))
+        idc = set(self.identity_cols.get(name, {}))
+        always = self.identity_always.get(name, set())
+        if cols is not None and gen & set(cols):
+            # PG: a generated column can only receive the DEFAULT keyword,
+            # whatever the OVERRIDING clause (tablecmds "cannot insert
+            # into column"); checked per VALUES tuple item, every covered
+            # column of a SELECT
+            bad = _values_explicit_identity(body, cols, gen)
+            if bad:
+                raise ValueError(
+                    f'cannot insert a non-DEFAULT value into column '
+                    f'"{bad[0]}" ("{bad[0]}" is a generated column)'
+                )
+        if always and overriding is None and not default_values:
+            bad = _values_explicit_identity(body, targets, always)
+            if bad:
+                raise ValueError(
+                    f'cannot insert a non-DEFAULT value into '
+                    f'column "{bad[0]}" (GENERATED ALWAYS AS '
+                    f"IDENTITY); use OVERRIDING SYSTEM VALUE"
+                )
+        user_values = overriding == "USER" and bool(idc) and values
+        if user_values:
+            # rewrite the identity positions to the DEFAULT keyword BEFORE
+            # folding, so the sequence is consumed exactly ONCE per row
+            body = _values_set_default(body, targets, idc)
+        if default_values:
+            # one row, every column from its declared DEFAULT (or NULL)
+            rows, cols = self.spark.range(1).select(), []
+        else:
+            positional = cols is None
+            if positional:
+                cols = [c for c in columns if c not in gen]
+            if values:
+                # fold DEFAULT keywords into declared defaults, consuming
+                # sequences
+                body = self._fold_values_defaults(name, body, cols)
+                rows = _values_frame(self.spark, body)
+            else:
+                rows = self.spark.sql(body)
+            if positional:
+                cols = cols[: len(rows.columns)]
+            rows = rows.toDF(*cols)
+        if overriding == "USER" and idc and not user_values:
+            # SELECT source: discard supplied identity values (PG) — the
+            # defaults below regenerate them from the sequence
+            keep = [c for c in cols if c not in idc]
+            rows, cols = rows.select(*keep), keep
+        dfl = self.table_defaults.get(name, {})
+        # DEFAULT VALUES is one row: a sequence default needs no count
+        n_cache: dict = {"n": 1} if default_values else {}
+        rows = rows.select(
+            *[
+                (
+                    F.col(f.name) if f.name in cols
+                    else self._default_expr(dfl[f.name], rows, n_cache)
+                    if f.name in dfl
+                    else F.lit(None)
+                ).cast(sql_type(f.dataType)).alias(f.name)
+                for f in fields
+            ]
+        )
+        return self._recompute_generated(name, rows)
 
     def _insert_on_conflict(
         self, name: str, body: str, key_csv: str, con_name, action: str,
@@ -1532,18 +1605,6 @@ class Catalog:
         DO NOTHING skips or WHERE-failed conflicts), matching PG."""
         from otterbrix_spark.operators.dml import ConstraintViolation
 
-        # a non-greedy SET slice may have split inside a subquery's WHERE
-        # (same hazard as _UPDATE_FROM): unbalanced parens mean the
-        # captured WHERE belongs to the SET expression — fold it back.
-        # Count parens on literal-stripped text: a paren INSIDE a string
-        # ('a(b') must not trigger the fold (self-review r10 batch 3)
-        if upd_where is not None:
-            bare = re.sub(r"'(?:[^']|'')*'", "''", action)
-            if bare.count("(") != bare.count(")"):
-                action = f"{action} WHERE {upd_where}"
-                upd_where = None
-
-        table = self.tables[name]
         uniques = [
             c for c in self.table_constraints.get(name, ())
             if c["kind"] == "unique"
@@ -1575,125 +1636,18 @@ class Catalog:
             keys = list(uniques[0]["cols"])  # primary path below; the
             # remaining constraints anti-join in the NOTHING branch
         else:
-            keys = [k.strip() for k in key_csv.split(",")]
+            # the arbiter list arrives as its parenthesised group
+            keys = [k.strip() for k in key_csv.strip()[1:-1].split(",")]
             if set(keys) not in [set(c["cols"]) for c in uniques]:
                 raise ValueError(
-                    f"ON CONFLICT ({key_csv}): no PRIMARY KEY or UNIQUE "
+                    f"ON CONFLICT {key_csv}: no PRIMARY KEY or UNIQUE "
                     f"constraint on {name} matches the arbiter columns "
                     "(PG requires an arbiter index)"
                 )
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
-        # incoming rows: same body forms as plain INSERT (column list +
-        # VALUES/SELECT, positional alignment to the table schema)
-        body = body.strip()
-        cols = None
-        mcols = re.match(
-            r"^\(\s*(\w+(?:\s*,\s*\w+)*)\s*\)\s*(.+)$", body, re.DOTALL
-        )
-        if mcols:
-            cols = [c.strip() for c in mcols.group(1).split(",")]
-            body = mcols.group(2).strip()
-        # PG OVERRIDING clause + GENERATED ALWAYS identity guard — same
-        # semantics as the plain-INSERT path (ADVICE r12: the upsert path
-        # previously accepted explicit values into ALWAYS identity columns
-        # and let OVERRIDING fall through to a raw Spark parse error)
-        overriding = None
-        mov = re.match(
-            r"^OVERRIDING\s+(SYSTEM|USER)\s+VALUE\s+(.+)$",
-            body, re.IGNORECASE | re.DOTALL,
-        )
-        if mov:
-            overriding = mov.group(1).upper()
-            body = mov.group(2).strip()
-        idc_all = set(self.identity_cols.get(name, {}))
+        base = self._live_df(name)
         gen_all = set(self.generated_cols.get(name, {}))
-        target_cols = cols if cols is not None else list(base.columns)
-        if gen_all and cols is not None and gen_all & set(cols):
-            # same refusal as plain INSERT: generated columns have no
-            # INSERT slot (DEFAULT keyword only)
-            if body.upper().startswith("VALUES"):
-                badg = _values_explicit_identity(
-                    body, cols, gen_all & set(cols)
-                )
-            else:
-                badg = sorted(gen_all & set(cols))
-            if badg:
-                raise ValueError(
-                    f'cannot insert a non-DEFAULT value into column '
-                    f'"{badg[0]}" ("{badg[0]}" is a generated column)'
-                )
-        user_handled = False
-        if (
-            overriding == "USER" and idc_all
-            and body.upper().startswith("VALUES")
-        ):
-            # rewrite identity positions to DEFAULT before folding, so the
-            # sequence is consumed exactly once per row
-            body = _values_set_default(body, target_cols, idc_all)
-            user_handled = True
-        ids = self.identity_always.get(name, set())
-        if ids and overriding is None:
-            if body.upper().startswith("VALUES"):
-                bad = _values_explicit_identity(body, target_cols, ids)
-            else:  # SELECT source: every covered column is explicit
-                bad = sorted(ids & set(target_cols))
-            if bad:
-                raise ValueError(
-                    f'cannot insert a non-DEFAULT value into '
-                    f'column "{bad[0]}" (GENERATED ALWAYS AS '
-                    f"IDENTITY); use OVERRIDING SYSTEM VALUE"
-                )
-        auto_skip_gen = gen_all and cols is None
-        if auto_skip_gen:
-            # positional sources target the non-generated columns only
-            # (PG; arity-trimmed after the frame is built below)
-            cols = [c for c in base.columns if c not in gen_all]
-        if body.upper().startswith("VALUES"):
-            # fold DEFAULT keywords (incl. those written by the USER
-            # rewrite above) into declared defaults, consuming sequences
-            body = self._fold_values_defaults(name, body, cols)
-            rows = _values_frame(self.spark, body)
-        else:
-            rows = self.spark.sql(body)
-        if auto_skip_gen and len(rows.columns) < len(cols):
-            cols = cols[: len(rows.columns)]
-        if overriding == "USER" and idc_all and not user_handled:
-            # SELECT source: discard supplied identity values (PG) — the
-            # defaults refill below regenerates them from the sequence
-            if cols is None:
-                cols = list(base.columns[: len(rows.columns)])
-            rows = rows.toDF(*cols)
-            keep = [c for c in cols if c not in idc_all]
-            if keep != cols:
-                rows = rows.select(*keep)
-                cols = keep
-        if cols:
-            rows = rows.toDF(*cols)
-            dfl = self.table_defaults.get(name, {})
-            n_cache: dict = {}
-            rows = rows.select(
-                *[
-                    F.col(f.name)
-                    if f.name in cols
-                    else (
-                        self._default_expr(dfl[f.name], rows, n_cache)
-                        if f.name in dfl
-                        else F.lit(None)
-                    ).cast(sql_type(f.dataType)).alias(f.name)
-                    for f in base.schema.fields
-                ]
-            )
-        rows = rows.toDF(*base.columns).select(
-            *[
-                F.col(f.name).cast(sql_type(f.dataType)).alias(f.name)
-                for f in base.schema.fields
-            ]
-        )
-        rows = self._recompute_generated(name, rows)
+        # incoming rows: the same body forms as plain INSERT
+        rows = self._insert_rows(name, body)
         non_keys = [c for c in base.columns if c not in keys]
         if action.upper() == "NOTHING":
             if upd_where is not None:
@@ -1825,52 +1779,83 @@ class Catalog:
         )
 
     def _publish(
-        self, name, new_df, matched, verb, returning, observed, count,
-        verify=None,
+        self, name, new_df, affected, verb, returning, observed, count,
+        verify=None, alias=None, children=(),
     ) -> DataFrame:
-        """Publish ``new_df`` as the rows of ``name`` for a join-write
-        (ON CONFLICT, UPDATE…FROM, DELETE…USING, MERGE). ``observed`` are
-        built into ``new_df``'s plan; ``count(metrics)`` is the
-        affected-row count and ``matched`` the affected rows.
+        """Publish ``new_df`` as the rows of ``name``: the one write
+        protocol of every statement that replaces a table's rows (UPDATE,
+        DELETE, their join and positioned forms, ON CONFLICT, MERGE and
+        TRUNCATE). ``affected`` are the rows the statement changed,
+        ``observed`` are built into ``new_df``'s plan, and
+        ``count(metrics)`` is the affected-row count. ``verify(metrics)``
+        raises to refuse the write. ``children`` are other tables' new
+        frames (FK cascades), published before ``name``.
 
-        Autocommit without RETURNING runs one Spark action, the staged
-        write: stage → ``verify(metrics)`` → commit. Otherwise no write
-        runs now: one pass to the no-op sink takes the metrics and
-        ``verify`` runs on them; then the frame is staged in the
-        transaction, or (RETURNING) the affected rows are pinned before the
-        table is swapped."""
-        table = self.tables[name]
-        if self._txn is None and not returning:
-            m = table._swap_in(new_df, *observed, verify=verify)
+        RETURNING projects ``affected`` under ``alias`` (default: the
+        table's name) before anything is written, so an unknown column
+        refuses the statement with every table as it was. Then:
+
+        - plain EXPLAIN (the probe): every frame is staged lazily; no pass
+          and no check run;
+        - RETURNING: the projected rows are pinned, since they are lazy
+          plans over the files a swap deletes. That job is also the one
+          that takes the metrics ``verify`` reads, so those observations
+          are built into ``affected``'s plan as well;
+        - in a transaction: without RETURNING, one pass into the no-op
+          sink takes ``observed``; ``verify`` runs, and every frame is
+          staged;
+        - autocommit: one action, the staged write, takes ``observed``;
+          ``verify`` runs before the swap (:meth:`ManagedTable._swap_in`).
+        """
+        rows = (
+            self._apply_returning(affected.alias(alias or name), returning)
+            if returning else None
+        )
+        probe = self._explain_probe
+        if returning and not probe:
+            rows = pin(rows)
+        if self._txn is None:
+            for child in children:
+                self._replace_rows(*child)
+            table = self.tables[name]
+            table._swap_in(new_df, *observed, verify=verify)
             self._register(table)
-            return self._status(**{verb: count(m)})
-        m = count_pass(new_df, *observed)
-        if verify is not None:
-            verify(m)
-        if self._txn is not None:
-            return self._stage_txn(
-                name, new_df, matched, verb, returning, n=count(m)
-            )
-        # pin the affected rows BEFORE the swap: they are lazy plans over
-        # the pre-swap files, which _swap_in deletes
-        result = pin(matched)
-        table._swap_in(new_df)
-        self._register(table)
-        return self._apply_returning(result, returning)
+        else:
+            if not (probe or returning):
+                count_pass(new_df, *observed)
+            if verify is not None and not probe:
+                verify(metrics(*observed))
+            for child in (*children, (name, new_df)):
+                self._replace_rows(*child)
+        if returning:
+            return rows
+        if probe:
+            # the status a plain EXPLAIN shows is the real count's plan
+            return affected.agg(F.count(F.lit(1)).alias(verb))
+        return self._status(**{verb: count(metrics(*observed))})
 
-    def _flagged_join(self, base, t_alias, src_name, s_alias, cond_text):
+    def _flagged_join(
+        self, base, t_alias, src_name, s_alias, cond_text, full=False
+    ):
         """``base`` LEFT JOIN the source on ``cond_text``, the source
         carrying a ``__hit`` marker (NULL on target rows no source row
         matches). A target row appears once per matching source row, or
         once unmatched, so "some target row matched more than once" is
-        exactly ``join_rows != target_rows``; both counts are observed.
-        Returns (joined, target observation)."""
+        exactly ``join_rows != target_rows``, counting join rows with a
+        target side; ``target_rows`` is observed. With ``full`` the join
+        is FULL OUTER, so source rows no target row matches appear once
+        with no target side. Returns (joined, target observation, "this
+        row has a target side" column)."""
         target = Observed(base, target_rows=F.count(F.lit(1)))
+        tgt, has_target = target.df, F.lit(True)
+        if full:
+            tgt = tgt.withColumn("__tgt", F.lit(True))
+            has_target = F.col("__tgt").isNotNull()
         src = self.spark.table(src_name).withColumn("__hit", F.lit(True))
-        joined = target.df.alias(t_alias).join(
-            src.alias(s_alias), F.expr(cond_text), "left"
+        joined = tgt.alias(t_alias).join(
+            src.alias(s_alias), F.expr(cond_text), "full" if full else "left"
         )
-        return joined, target
+        return joined, target, has_target
 
     def _update_from(
         self, name, set_clause, src_name, src_alias, where, returning
@@ -1885,12 +1870,7 @@ class Catalog:
         the guard's counts and the updated count."""
         from otterbrix_spark.operators.dml import ConstraintViolation
 
-        table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
+        base = self._live_df(name)
         set_txt = _split_set_list(set_clause)
         genu = set(self.generated_cols.get(name, {}))
         badg = sorted(
@@ -1904,7 +1884,7 @@ class Catalog:
             )
         set_txt = {c: e for c, e in set_txt.items() if c not in genu}
         sets = _resolve_set_targets(set_txt)
-        joined, target = self._flagged_join(
+        joined, target, _ = self._flagged_join(
             base, name, src_name, src_alias or src_name, where
         )
         hit = F.col("__hit").isNotNull()
@@ -1957,22 +1937,15 @@ class Catalog:
         partition it."""
         talias = tgt_alias or name
         src = self.spark.table(src_name).alias(src_alias or src_name)
-        doomed = self._live_df(name).alias(talias).join(
-            src, F.expr(where), "left_semi"
-        )
-        # parent-side FK semantics, same as the plain DELETE path
-        for child_name, new_child in self._fk_on_delete(
-            name, doomed, F.lit(True)
-        ):
-            if self._txn is not None:
-                self._txn[child_name] = new_child
-                new_child.createOrReplaceTempView(child_name)
-            else:
-                self.tables[child_name]._swap_in(new_child)
-                self._register(self.tables[child_name])
-        # re-read: a self-referencing FK's SET NULL / CASCADE rewrote
-        # this table's own rows above
         base = self._live_df(name)
+        # parent-side FK semantics, same as the plain DELETE path
+        own, children = self._fk_on_delete(
+            name, base.alias(talias).join(src, F.expr(where), "left_semi"),
+            F.lit(True),
+        )
+        # a self-referencing FK's SET NULL / CASCADE rewrote this table's
+        # own rows: the delete applies to those
+        base = own if own is not None else base
         matched = base.alias(talias).join(src, F.expr(where), "left_semi")
         before = Observed(base, rows=F.count(F.lit(1)))
         after = Observed(
@@ -1982,6 +1955,7 @@ class Catalog:
         return self._publish(
             name, after.df, matched, "deleted", returning,
             (before, after), lambda m: m["rows"] - m["kept"],
+            alias=talias, children=children,
         )
 
     def _merge_into(
@@ -1995,24 +1969,19 @@ class Catalog:
         matched). Like ``_update_from`` (and unlike PG's arbitrary pick),
         a target row matched by several source rows is REFUSED.
 
-        Distributed shape — the lakehouse merge: ONE LEFT join of target
-        to source for the matched clauses, ONE anti-join for not-matched
-        source rows, one union. Clause selection is a column-level CASE
-        cascade over the joined frame (no per-clause re-join, no per-row
-        loop); at 100 TB this is exactly the shuffle-merge a Delta/Iceberg
-        MERGE executes. The write observes the guard's counts and the
-        updated, deleted and inserted counts."""
+        Distributed shape — the lakehouse merge: ONE join of target to
+        source, LEFT for the matched clauses alone, FULL OUTER when a NOT
+        MATCHED clause inserts (its source-only rows are the insert
+        candidates). Clause selection is a column-level CASE cascade over
+        the joined frame (no per-clause re-join, no per-row loop); at
+        100 TB this is exactly the shuffle-merge a Delta/Iceberg MERGE
+        executes. The write observes the guard's counts and the updated,
+        deleted and inserted counts."""
         from otterbrix_spark.operators.dml import ConstraintViolation
 
-        table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None
-            else table.df()
-        )
+        base = self._live_df(name)
         t_alias = t_alias or name
         src_alias = src_alias or src_name
-        src = self.spark.table(src_name)
         # split WHEN clauses over STRING-PROTECTED text (same discipline
         # as _match_protected): a literal containing ' WHEN MATCHED ' or
         # ' THEN ' must never terminate an action early
@@ -2067,47 +2036,7 @@ class Catalog:
                 raise ValueError(
                     f"MERGE WHEN MATCHED: unsupported action {action!r}"
                 )
-        joined, target = self._flagged_join(
-            base, t_alias, src_name, src_alias, on_text
-        )
-        # a target row no source row matched fires no clause (-1)
-        fired = Observed(
-            joined.withColumn(
-                "__fire",
-                F.when(F.col("__hit").isNotNull(), _fire(matched_cl))
-                .otherwise(F.lit(-1)),
-            ),
-            join_rows=F.count(F.lit(1)),
-            updated=F.count_if(F.col("__fire").isin(upd_idx)),
-            deleted=F.count_if(F.col("__fire").isin(del_idx)),
-        )
-        matched_after = (
-            fired.df.filter(~F.col("__fire").isin(del_idx) if del_idx
-                            else F.lit(True))
-            .select(
-                "__fire",
-                *[
-                    (
-                        col_chain[f.name].otherwise(
-                            F.col(f"{t_alias}.{f.name}")
-                        )
-                        if f.name in col_chain
-                        else F.col(f"{t_alias}.{f.name}")
-                    ).cast(sql_type(f.dataType)).alias(f.name)
-                    for f in fields
-                ],
-            )
-        )
-        updated = matched_after.filter(
-            F.col("__fire").isin(upd_idx) if upd_idx else F.lit(False)
-        ).drop("__fire")
-        new_df = matched_after.drop("__fire")
-
-        not_matched = src.alias(src_alias).join(
-            base.alias(t_alias), F.expr(on_text), "left_anti"
-        )
-        ins_frames = []
-        nm_fired = not_matched.withColumn("__fire", _fire(notm_cl))
+        inserts = []  # (clause index, {column: value text})
         for i, (_, _, action) in notm_cl:
             if action.upper() == "DO NOTHING":
                 continue
@@ -2125,23 +2054,67 @@ class Catalog:
                 raise ValueError(
                     "MERGE INSERT: column list and VALUES arity differ"
                 )
-            by_col = dict(zip(cols, exprs))
-            ins_frames.append(
-                nm_fired.filter(F.col("__fire") == i).select(
-                    *[
-                        (
-                            F.expr(by_col[f.name]) if f.name in by_col
-                            else F.lit(None)
-                        ).cast(sql_type(f.dataType)).alias(f.name)
-                        for f in fields
-                    ]
-                )
-            )
+            inserts.append((i, dict(zip(cols, exprs))))
+        joined, target, has_target = self._flagged_join(
+            base, t_alias, src_name, src_alias, on_text, full=bool(inserts)
+        )
+        # a target row no source row matched fires no clause (-1), nor
+        # does a source row no target row matched
+        fired = Observed(
+            joined.withColumn(
+                "__fire",
+                F.when(
+                    F.col("__hit").isNotNull() & has_target,
+                    _fire(matched_cl),
+                ).otherwise(F.lit(-1)),
+            ),
+            join_rows=F.count_if(has_target),
+            updated=F.count_if(F.col("__fire").isin(upd_idx)),
+            deleted=F.count_if(F.col("__fire").isin(del_idx)),
+        )
+        kept = has_target
+        if del_idx:
+            kept = kept & ~F.col("__fire").isin(del_idx)
+        matched_after = fired.df.filter(kept).select(
+            "__fire",
+            *[
+                (
+                    col_chain[f.name].otherwise(F.col(f"{t_alias}.{f.name}"))
+                    if f.name in col_chain
+                    else F.col(f"{t_alias}.{f.name}")
+                ).cast(sql_type(f.dataType)).alias(f.name)
+                for f in fields
+            ],
+        )
+        updated = matched_after.filter(
+            F.col("__fire").isin(upd_idx) if upd_idx else F.lit(False)
+        ).drop("__fire")
+        new_df = matched_after.drop("__fire")
         observed = [target, fired]
         affected = updated
-        if ins_frames:
+        if inserts:
+            # the source side of the source-only rows, under its own
+            # alias: NOT MATCHED clauses see the source row alone, as in PG
+            src_only = (
+                fired.df.filter(~has_target)
+                .select(F.col(f"{src_alias}.*"))
+                .drop("__hit")
+                .alias(src_alias)
+                .withColumn("__fire", _fire(notm_cl))
+            )
             inserted = Observed(
-                functools.reduce(DataFrame.unionByName, ins_frames),
+                functools.reduce(DataFrame.unionByName, [
+                    src_only.filter(F.col("__fire") == i).select(
+                        *[
+                            (
+                                F.expr(by_col[f.name]) if f.name in by_col
+                                else F.lit(None)
+                            ).cast(sql_type(f.dataType)).alias(f.name)
+                            for f in fields
+                        ]
+                    )
+                    for i, by_col in inserts
+                ]),
                 inserted=F.count(F.lit(1)),
             )
             observed.append(inserted)
@@ -2238,18 +2211,24 @@ class Catalog:
             if c["kind"] == "fk" and c["parent"] == parent
         ]
 
-    def _fk_on_delete(self, name: str, base: DataFrame, cond) -> list[tuple[str, DataFrame]]:
-        """Apply FK semantics for a DELETE on parent ``name``: raise for
-        referencing children under RESTRICT/NO ACTION (checked eagerly,
-        before any mutation), and return the surviving child frames for ON
-        DELETE CASCADE (children first, as in fk_cascade_delete). The doomed
-        key set stays distributed (semi/anti joins, no collect)."""
+    def _fk_on_delete(
+        self, name: str, base: DataFrame, cond
+    ) -> "tuple[DataFrame | None, list[tuple[str, DataFrame]]]":
+        """Apply FK semantics for a DELETE of ``base``'s ``cond`` rows from
+        parent ``name``: raise for referencing children under RESTRICT/NO
+        ACTION (checked eagerly, before any mutation), and return the new
+        child frames for ON DELETE CASCADE / SET NULL, published before
+        the parent (children first, as in fk_cascade_delete). A
+        self-referencing FK's frame is returned apart, as (this table's
+        rewritten rows or None, the other tables' frames): the delete
+        applies to those rows. The doomed key set stays distributed
+        (semi/anti joins, no collect)."""
         from otterbrix_spark.operators.dml import ConstraintViolation
 
         cascades: list[tuple[str, DataFrame]] = []
         deps = self._fk_dependents(name)
         if not deps:
-            return cascades
+            return None, cascades
         doomed_base = base.filter(F.coalesce(cond, F.lit(False)))
         for child_name, c in deps:
             child = self._live_df(child_name)
@@ -2283,7 +2262,11 @@ class Catalog:
                         f"{c['name']}: {n} row(s) in {child_name} still "
                         f"reference deleted {name} rows"
                     )
-        return cascades
+        own = [frame for child, frame in cascades if child == name]
+        return (
+            own[0] if own else None,
+            [(child, frame) for child, frame in cascades if child != name],
+        )
 
     def _default_expr(
         self, expr_text: str, rows, n_cache: dict
@@ -2392,15 +2375,12 @@ class Catalog:
             i += 1
         n_rows = 0
         for name in doomed:
-            table = self.tables[name]
-            if self._txn is not None:
-                base = self._txn.get(name, table.df())
-                empty = base.filter(F.lit(False))
-                self._txn[name] = empty
-                empty.createOrReplaceTempView(name)
-            else:
-                n_rows += table.delete(F.lit(True))
-                self._register(table)
+            seen = Observed(self._live_df(name), rows=F.count(F.lit(1)))
+            self._publish(
+                name, seen.df.filter(F.lit(False)), seen.df, "truncated",
+                None, (seen,), lambda m: m["rows"],
+            )
+            n_rows += seen.get()["rows"]
             if restart:
                 import re as _re
 
@@ -2625,90 +2605,63 @@ class Catalog:
 
         from pyspark.sql import Window
 
-        table = self.tables[name]
-        base = (
-            self._txn.get(name, table.df())
-            if self._txn is not None else table.df()
-        )
+        base = self._live_df(name)
         cols = [f.name for f in base.schema.fields]
         match = _reduce(_and, [
             F.col(c).isNull() if row[c] is None
             else F.col(c).eqNullSafe(F.lit(row[c]))
             for c in cols
         ])
-        marked = base.withColumn(
-            "__otx_rn",
-            F.row_number().over(
-                Window.partitionBy(*cols).orderBy(F.lit(1))
-            ),
-        )
+        rn = F.row_number().over(Window.partitionBy(*cols).orderBy(F.lit(1)))
+        marked = base.withColumn("__otx_rn", rn)
         target = match & (F.col("__otx_rn") == 1)
         probe = self._explain_probe
+        children, sets, verify = [], {}, None
         if del_table:
             # parent-side FK semantics, exactly like the plain DELETE
-            # path: RESTRICT raises before any mutation; CASCADE /
-            # SET NULL child frames stage or swap alongside
-            for child_name, new_child in self._fk_on_delete(
-                name, marked, target
-            ):
-                if self._txn is not None:
-                    self._txn[child_name] = new_child
-                    new_child.createOrReplaceTempView(child_name)
-                else:
-                    self.tables[child_name]._swap_in(new_child)
-                    self._register(self.tables[child_name])
-            new_df = marked.filter(~target).select(*cols)
-            matched = marked.filter(target).select(*cols)
-            verb = "deleted"
+            # path: RESTRICT raises before any mutation; CASCADE / SET
+            # NULL child frames publish alongside
+            own, children = self._fk_on_delete(name, marked, target)
+            if own is not None:
+                marked = own.withColumn("__otx_rn", rn)
         else:
             # SET col = DEFAULT assigns the declared default (plain-
             # UPDATE parity); sequence calls consume ONE statement value
             dfl = self.table_defaults.get(name, {})
-            set_texts = {
+            sets = _resolve_set_targets({
                 col: self._consume_seq_text(
                     dfl.get(col, "NULL")
                     if expr.strip().upper() == "DEFAULT" else expr
                 )
                 for col, expr in _split_set_list(set_clause).items()
-            }
-            sets = _resolve_set_targets(set_texts)
-            new_df, matched = apply_update(marked, target, sets)
-            new_df = new_df.select(*cols)
-            matched = matched.select(*cols)
-            if not probe:
-                # pin the post-update row NOW: the swap below deletes
-                # the files its lazy plan reads, and the cursor
-                # repositions on it
-                matched = matched.localCheckpoint(eager=True)
-            verb = "updated"
-        self._validate_new_rows(name, matched, full=new_df)
-        if self._txn is not None:
-            out = self._stage_txn(name, new_df, matched, verb, returning)
-        else:
-            if returning:
-                if del_table:
-                    matched = matched.localCheckpoint(eager=True)
-                table._swap_in(new_df)
-                self._register(table)
-                out = self._apply_returning(matched, returning)
-            else:
-                n = matched.count()
-                table._swap_in(new_df)
-                self._register(table)
-                out = self._status(**{verb: n})
+            })
+        flagged = flag_update(marked, target, sets).drop("__otx_rn")
+        new_df, affected, seen = flagged_write(flagged, bool(del_table))
+        if not del_table:
+            def verify(_):
+                self._validate_new_rows(name, affected, full=new_df)
+
+            # PG follows the update chain: the cursor moves to the
+            # post-update row (a second positioned UPDATE re-updates).
+            # Taken before the write, which deletes the files it reads
+            # (from the unobserved frame: a partial run must not take
+            # the write's count), and never under a plain-EXPLAIN probe
+            new_row = None if probe else (
+                flagged.filter(F.col("_matched")).drop("_matched")
+                .limit(1).collect()
+            )
+        out = self._publish(
+            name, new_df, affected, "deleted" if del_table else "updated",
+            returning, (seen,), lambda m: m["n"], verify,
+            children=children,
+        )
         # cursor position updates happen only AFTER the statement
-        # succeeded, and never under a plain-EXPLAIN probe (the probe
-        # must not mutate cursor state or run eager jobs)
+        # succeeded, and never under a plain-EXPLAIN probe
         if not probe:
             if del_table:
                 cur["current"] = None  # the row under the cursor is gone
-            else:
-                # PG follows the update chain: the cursor now sees the
-                # post-update values (a second positioned UPDATE
-                # re-updates)
-                new_row = matched.limit(1).collect()
-                if new_row:
-                    cur["current"] = new_row[0]
+            elif new_row:
+                cur["current"] = new_row[0]
         return out
 
     def _with_dml(self, ctes, tail: str) -> DataFrame:
@@ -2719,7 +2672,7 @@ class Catalog:
 
         - every sub-statement sees the SAME statement-start snapshot —
           the main query reads the PRE-modification state of any table a
-          CTE writes (pinned via localCheckpoint on plain parquet; on a
+          CTE writes (pinned with ``pin`` on plain parquet; on a
           Delta/Iceberg backing this would be a free version read — the
           documented table-format seam);
         - each DML CTE executes exactly once, even if unreferenced;
@@ -2768,15 +2721,8 @@ class Catalog:
                 )
             if t not in self.tables:
                 raise ValueError(f"unknown table in WITH sub-statement: {t}")
-            base = (
-                self._txn[t]
-                if (self._txn is not None and t in self._txn)
-                else self.tables[t].df()
-            )
-            pinned[t] = (
-                base if self._explain_probe
-                else base.localCheckpoint(eager=True)
-            )
+            base = self._live_df(t)
+            pinned[t] = base if self._explain_probe else pin(base)
         cte_views: list[str] = []
         try:
             for t, df in pinned.items():
@@ -2802,7 +2748,7 @@ class Catalog:
                         # a temp view does not reliably reuse the DML
                         # path's cache, and the lineage reads parquet
                         # files the swap just deleted
-                        out = out.localCheckpoint(eager=True)
+                        out = pin(out)
                 else:
                     # plain CTE: resolve NOW as a temp view, in
                     # declaration order — a later DML sub-statement may
@@ -2992,7 +2938,7 @@ class Catalog:
                     )
             df = self.spark.sql(query)
             if updatable:
-                df = df.localCheckpoint(eager=True)
+                df = pin(df)
             entry = {
                 "schema": df.schema,
                 "holdable": holdable,
@@ -3010,7 +2956,7 @@ class Catalog:
             }
             if scroll:
                 # SCROLL cursor (PG's tuplestore): pin the result ONCE
-                # (localCheckpoint — stable partition layout), number it
+                # (a local checkpoint — stable partition layout), number it
                 # densely with the partition-offset renumbering (no
                 # global single-task window), pin the numbering, and
                 # serve every FETCH direction as a position-range filter
@@ -3020,9 +2966,7 @@ class Catalog:
                 # OF needs the streaming NO SCROLL path) — documented.
                 from otterbrix_spark.operators.dml import with_sequence
 
-                pinned = with_sequence(
-                    df.localCheckpoint(eager=True), "__otx_pos"
-                ).localCheckpoint(eager=True)
+                pinned = pin(with_sequence(pin(df), "__otx_pos"))
                 entry.update({
                     "scroll": True,
                     "df": pinned,
@@ -3035,9 +2979,7 @@ class Catalog:
                 # snapshot; WITH HOLD materializes at COMMIT — the
                 # checkpoint is the Spark spelling of that tuplestore,
                 # executor-resident and spillable; self-review r13 pass 2)
-                entry["it"] = iter(
-                    df.localCheckpoint(eager=True).toLocalIterator()
-                )
+                entry["it"] = iter(pin(df).toLocalIterator())
             self._pg_cursors[name] = entry
             return self._empty_status(declared=name)
         m = re.match(
@@ -4941,7 +4883,6 @@ class Catalog:
         m = self._match_protected(_UPDATE, sql, nested=True)
         if m and m[0] in self.tables:
             name, set_clause, where, returning = m
-            table = self.tables[name]
             cond = F.expr(where) if where else F.lit(True)
             set_texts = _split_set_list(set_clause)
             # PG: SET col = DEFAULT assigns the declared default (or NULL)
@@ -4983,36 +4924,21 @@ class Catalog:
                     c: e for c, e in set_texts.items() if c not in gen
                 }
             sets = _resolve_set_targets(set_texts)
-            if self._txn is not None:
-                base = self._txn.get(name, table.df()).alias(name)
-                new_df, matched = apply_update(base, cond, sets)
-                if gen:
-                    # recompute from the NEW row values (SET exprs above
-                    # evaluate against the OLD row, generated columns
-                    # against the updated one — PG ordering)
-                    new_df = self._recompute_generated(name, new_df)
-                    matched = self._recompute_generated(name, matched)
-                self._validate_new_rows(name, matched, full=new_df)
-                return self._stage_txn(name, new_df, matched, "updated", returning)
-            result = table.update(
-                cond, sets, returning=bool(returning),
-                validator=(
-                    (lambda m2, f2: self._validate_new_rows(name, m2, full=f2))
-                    if self.table_constraints.get(name) else None
-                ),
-                # generated columns recompute between the SET projection
-                # and validation/swap — one hook, no duplicated protocol
-                transform=(
-                    (lambda nd, mt: (
-                        self._recompute_generated(name, nd),
-                        self._recompute_generated(name, mt),
-                    )) if gen else None
-                ),
+            # the table's name qualifies the target row, so a correlated
+            # subquery can reference it (``t.id``)
+            new_df, updated, seen = flagged_write(
+                flag_update(self._live_df(name).alias(name), cond, sets)
             )
-            self._register(table)
-            if returning:
-                return self._apply_returning(result, returning)
-            return self._status(updated=result)
+            # generated columns recompute from the NEW row values (SET
+            # exprs above evaluate against the OLD row, generated columns
+            # against the updated one — PG ordering)
+            new_df = self._recompute_generated(name, new_df)
+            updated = self._recompute_generated(name, updated)
+            return self._publish(
+                name, new_df, updated, "updated", returning, (seen,),
+                lambda m: m["n"],
+                lambda _: self._validate_new_rows(name, updated, full=new_df),
+            )
 
         m = _TRUNCATE.match(sql)
         if m and all(
@@ -5031,34 +4957,26 @@ class Catalog:
         m = self._match_protected(_DELETE, sql)
         if m and m[0] in self.tables:
             name, where, returning = m
-            table = self.tables[name]
             cond = F.expr(where) if where else F.lit(True)
-            if self._txn is not None:
-                base = self._txn.get(name, table.df()).alias(name)
-                # FK semantics first: restrict raises before anything stages;
-                # cascades stage the surviving child frames alongside
-                for child_name, new_child in self._fk_on_delete(name, base, cond):
-                    self._txn[child_name] = new_child
-                    new_child.createOrReplaceTempView(child_name)
-                # a self-referencing FK staged its SET NULL / CASCADE child
-                # frame under this table's own name: delete from that one
-                base = self._txn.get(name, base).alias(name)
-                new_df, matched = apply_delete(base, cond)
-                return self._stage_txn(name, new_df, matched, "deleted", returning)
-            # children first (fk_cascade_delete ordering): restrict checks
-            # run eagerly, cascade swaps materialise before the parent delete
-            for child_name, new_child in self._fk_on_delete(
-                name, table.df().alias(name), cond
-            ):
-                self.tables[child_name]._swap_in(new_child)
-                self._register(self.tables[child_name])
-            result = table.delete(cond, returning=bool(returning))
-            self._register(table)
-            if returning:
-                return self._apply_returning(result, returning)
-            return self._status(deleted=result)
+            base = self._live_df(name).alias(name)
+            # FK semantics first: RESTRICT raises before anything is
+            # written; CASCADE / SET NULL child frames publish first, and
+            # a self-referencing FK's rewrite of this table's own rows is
+            # what the delete applies to
+            own, children = self._fk_on_delete(name, base, cond)
+            if own is not None:
+                base = own.alias(name)
+            new_df, deleted, seen = flagged_write(
+                flag_update(base, cond, {}), delete=True
+            )
+            return self._publish(
+                name, new_df, deleted, "deleted", returning, (seen,),
+                lambda m: m["n"], children=children,
+            )
 
-        m = self._match_protected(_INSERT_CONFLICT, sql)
+        # the arbiter list and SET subqueries are protected: a subquery's
+        # own WHERE does not end the SET list
+        m = self._match_protected(_INSERT_CONFLICT, sql, nested=True)
         if m and m[0] in self.tables:
             return self._insert_on_conflict(*m)
 
@@ -5085,7 +5003,7 @@ class Catalog:
                 # eager pin would execute the source query, and the probe
                 # discards the staging anyway (ADVICE r8).
                 if not self._explain_probe:
-                    rows = rows.localCheckpoint(eager=True)
+                    rows = pin(rows)
                 self._txn_dyn.setdefault(name, []).append(rows)
                 dyn.df(extra=self._txn_dyn[name]).createOrReplaceTempView(
                     name
@@ -5101,9 +5019,7 @@ class Catalog:
                 # (self-review r9 — the managed-table eager-count rule
                 # applies here too). RETURNING pins its own copy.
                 if returning:
-                    return self._apply_returning(
-                        rows, returning
-                    ).localCheckpoint(eager=True)
+                    return pin(self._apply_returning(rows, returning))
                 n = rows.count()  # cheap: counts the pinned checkpoint
                 return self._status(inserted=n)
             dyn.insert(rows)  # schema-on-write: new columns extend the table
@@ -5115,178 +5031,35 @@ class Catalog:
         m = self._match_protected(_INSERT, sql)
         if m and m[0] in self.tables:
             name, body, returning = m
-            table = self.tables[name]
-            body = body.strip()
-            # optional explicit column list: INSERT INTO t (a, b) VALUES/SELECT
-            cols = None
-            mcols = re.match(r"^\(\s*(\w+(?:\s*,\s*\w+)*)\s*\)\s*(.+)$", body, re.DOTALL)
-            if mcols:
-                cols = [c.strip() for c in mcols.group(1).split(",")]
-                body = mcols.group(2).strip()
-            # PG OVERRIDING clause (between the column list and the
-            # source): SYSTEM VALUE lets explicit values reach GENERATED
-            # ALWAYS identity columns; USER VALUE discards supplied
-            # values for identity columns in favour of their sequence
-            overriding = None
-            mov = re.match(
-                r"^OVERRIDING\s+(SYSTEM|USER)\s+VALUE\s+(.+)$",
-                body, re.IGNORECASE | re.DOTALL,
+            rows = self._insert_rows(name, body)
+            # RETURNING resolves before anything is written
+            out = (
+                self._apply_returning(rows.alias(name), returning)
+                if returning else None
             )
-            if mov:
-                overriding = mov.group(1).upper()
-                body = mov.group(2).strip()
-            idc_all = set(self.identity_cols.get(name, {}))
-            gen_all = set(self.generated_cols.get(name, {}))
-            if gen_all and cols is not None and gen_all & set(cols):
-                # PG: a generated column can only receive the DEFAULT
-                # keyword — explicit values are refused regardless of
-                # OVERRIDING (tablecmds "cannot insert into column")
-                if body.upper().startswith("VALUES"):
-                    badg = _values_explicit_identity(
-                        body, cols, gen_all & set(cols)
-                    )
-                else:
-                    badg = sorted(gen_all & set(cols))
-                if badg:
-                    raise ValueError(
-                        f'cannot insert a non-DEFAULT value into column '
-                        f'"{badg[0]}" ("{badg[0]}" is a generated column)'
-                    )
-            user_handled = False
-            if (
-                overriding == "USER" and idc_all
-                and body.upper().startswith("VALUES")
-            ):
-                # PG OVERRIDING USER VALUE on a VALUES source: rewrite
-                # the identity positions to the DEFAULT keyword BEFORE
-                # folding, so the sequence is consumed exactly ONCE per
-                # row (the drop-then-refill form double-consumed when a
-                # tuple already said DEFAULT — self-review r11 loop 2)
-                body = _values_set_default(
-                    body, cols or list(table.df().columns), idc_all
+            if self._explain_probe:
+                # plan-only probe: staged lazily, no job and no check
+                self._replace_rows(name, self._live_df(name).unionByName(rows))
+                return out if returning else rows.agg(
+                    F.count(F.lit(1)).alias("inserted")
                 )
-                user_handled = True
-            ids = self.identity_always.get(name, set())
-            if ids and overriding is None and not re.fullmatch(
-                r"DEFAULT\s+VALUES", body, re.IGNORECASE
-            ):
-                # refuse explicit non-DEFAULT values into ALWAYS identity
-                # columns (PG); checked per VALUES tuple item, so string
-                # literals containing 'DEFAULT' or parens in expressions
-                # cannot confuse the guard, and the DEFAULT keyword stays
-                # legal in any tuple position
-                target_cols = (
-                    cols if cols is not None else list(table.df().columns)
-                )
-                if body.upper().startswith("VALUES"):
-                    bad = _values_explicit_identity(body, target_cols, ids)
-                else:  # SELECT source: every covered column is explicit
-                    bad = sorted(ids & set(target_cols))
-                if bad:
-                    raise ValueError(
-                        f'cannot insert a non-DEFAULT value into '
-                        f'column "{bad[0]}" (GENERATED ALWAYS AS '
-                        f"IDENTITY); use OVERRIDING SYSTEM VALUE"
-                    )
-            if re.fullmatch(r"DEFAULT\s+VALUES", body, re.IGNORECASE):
-                # PG: INSERT INTO t DEFAULT VALUES — one row, every column
-                # from its declared DEFAULT (or NULL)
-                dfl = self.table_defaults.get(name, {})
-                rows = self.spark.range(1).select(
-                    *[
-                        (
-                            self._default_expr(dfl[f.name], None, {})
-                            if f.name in dfl
-                            else F.lit(None)
-                        ).cast(sql_type(f.dataType)).alias(f.name)
-                        for f in table.df().schema.fields
-                    ]
-                )
-                cols = None
-            elif body.upper().startswith("VALUES"):
-                auto_skip = cols is None and bool(gen_all)
-                if auto_skip:
-                    # PG: positional VALUES target the non-generated
-                    # columns only (generated columns have no INSERT slot)
-                    cols = [
-                        c for c in table.df().columns if c not in gen_all
-                    ]
-                body = self._fold_values_defaults(name, body, cols)
-                rows = _values_frame(self.spark, body)
-                if not cols and len(rows.columns) < len(table.df().columns):
-                    # PG: a short VALUES row list targets the leading
-                    # columns; the rest take their DEFAULT (or NULL)
-                    cols = table.df().columns[: len(rows.columns)]
-                if auto_skip and len(rows.columns) < len(cols):
-                    cols = cols[: len(rows.columns)]
-                rows = rows.toDF(*(cols or table.df().columns))
-            else:
-                rows = self.spark.sql(body)
-                if cols:
-                    rows = rows.toDF(*cols)
-                elif gen_all:
-                    # SELECT source, no column list: positions map to the
-                    # non-generated columns (PG)
-                    cols = [
-                        c for c in table.df().columns if c not in gen_all
-                    ][: len(rows.columns)]
-                    rows = rows.toDF(*cols)
-            if overriding == "USER" and idc_all and not user_handled:
-                # PG: OVERRIDING USER VALUE discards supplied identity
-                # values — SELECT sources drop the columns here so the
-                # reorder below refills them from the sequence default
-                if cols is None:
-                    rows = rows.toDF(
-                        *table.df().columns[: len(rows.columns)]
-                    )
-                    cols = list(rows.columns)
-                keep = [c for c in cols if c not in idc_all]
-                if keep != cols:
-                    rows = rows.select(*keep)
-                    cols = keep
-            if cols is not None:
-                # reorder to the table schema; omitted columns take their
-                # declared DEFAULT expression, else NULL (PG semantics)
-                dfl = self.table_defaults.get(name, {})
-                n_cache: dict = {}
-                rows = rows.select(
-                    *[
-                        F.col(f.name)
-                        if f.name in cols
-                        else (
-                            self._default_expr(dfl[f.name], rows, n_cache)
-                            if f.name in dfl
-                            else F.lit(None)
-                        ).cast(sql_type(f.dataType)).alias(f.name)
-                        for f in table.df().schema.fields
-                    ]
-                )
-            # positional alignment to the table schema (PG semantics: INSERT
-            # ... SELECT matches by position, not by source column name) —
-            # also what makes constraint exprs resolve against table names
-            rows = rows.toDF(*table.df().columns)
-            # stored generated columns compute LAST, from the fully
-            # defaulted row (PG ExecComputeStoredGenerated)
-            rows = self._recompute_generated(name, rows)
-            if self._txn is not None:
-                base = self._txn.get(name, table.df())
-                # coerce to the declared schema (mirrors ManagedTable.insert)
-                # so a txn INSERT can't silently widen column types via union
-                rows = rows.select(
-                    *[
-                        F.col(f.name).cast(sql_type(f.dataType)).alias(f.name)
-                        for f in base.schema.fields
-                    ]
-                )
-                self._validate_new_rows(name, rows)
-                new_df = base.unionByName(rows)
-                return self._stage_txn(name, new_df, rows, "inserted", returning)
             self._validate_new_rows(name, rows)
-            result = table.insert(rows, returning=bool(returning))
-            self._register(table)
-            if returning:
-                return self._apply_returning(result, returning)
-            return self._status(inserted=result)
+            if self._txn is None:
+                # an append, not a swap: INSERT's own write step, which
+                # observes its count
+                table = self.tables[name]
+                n = table.insert(rows)
+                self._register(table)
+            elif returning:
+                # pinned now: COMMIT's swap deletes the files the lazy
+                # rows would read
+                out = pin(out)
+            else:
+                seen = Observed(rows, inserted=F.count(F.lit(1)))
+                n = count_pass(seen.df, seen)["inserted"]
+            if self._txn is not None:
+                self._replace_rows(name, self._live_df(name).unionByName(rows))
+            return out if returning else self._status(inserted=n)
 
         if _OWNED_DDL_FAMILIES.match(sql):
             raise ValueError(

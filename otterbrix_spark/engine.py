@@ -490,8 +490,10 @@ def _only_comments(stmt: str) -> bool:
 def _split_statements(sql: str) -> list[str]:
     """Split a batch on top-level semicolons — string-literal AND
     comment-aware: a ';' inside '...', a `--` line comment, or a `/* */`
-    block comment never splits the batch (comments are preserved verbatim;
-    Spark's parser accepts both forms). Comment-only segments are dropped."""
+    block comment never splits the batch (comments inside a statement are
+    preserved verbatim; Spark's parser accepts both forms). Comments before
+    a statement's first token are dropped, so the catalog's statement
+    patterns see its head; comment-only segments are dropped."""
     import re as _re
 
     out: list[str] = []
@@ -523,13 +525,13 @@ def _split_statements(sql: str) -> list[str]:
         if ch == "-" and sql[i : i + 2] == "--":  # line comment
             j = sql.find("\n", i)
             j = n if j == -1 else j
-            cur += sql[i:j]
+            cur += sql[i:j] if cur.strip() else ""
             i = j
             continue
         if ch == "/" and sql[i : i + 2] == "/*":  # block comment
             j = sql.find("*/", i + 2)
             j = n if j == -1 else j + 2
-            cur += sql[i:j]
+            cur += sql[i:j] if cur.strip() else ""
             i = j
             continue
         if ch == ";":

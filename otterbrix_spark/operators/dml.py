@@ -83,45 +83,53 @@ class Observed:
         n = seen.get()["inserted"]
 
     Metrics must be aggregates of columns (Spark refuses subqueries there).
-    :meth:`get` is read after that action. When the optimizer proves the
-    observed subtree empty and drops it (``DELETE ... WHERE true`` filters
-    on a literal ``false``), the action reports no metrics; :meth:`get`
-    then aggregates the unobserved frame, one job on that path only."""
+    :meth:`get` is read after that action; only the first action that
+    runs the observed node counts (Spark's ``Observation``). When the
+    optimizer proves the observed subtree empty and drops it (``DELETE ...
+    WHERE true`` filters on a literal ``false``), the action reports no
+    metrics; :meth:`get` then aggregates the unobserved frame, one job on
+    that path only. Either way the first answer is kept."""
 
     def __init__(self, df: DataFrame, **metrics: Column):
         self._src = df
         self._metrics = [c.alias(k) for k, c in metrics.items()]
         self._obs = Observation()
+        self._got: dict | None = None
         self.df = df.observe(self._obs, *self._metrics)
 
     def get(self) -> dict:
-        try:
-            return self._obs.get
-        except Py4JJavaError:  # the action ran without the observed node
-            return self._src.agg(*self._metrics).first().asDict()
+        if self._got is None:
+            try:
+                self._got = self._obs.get
+            except Py4JJavaError:  # the action ran without the observed node
+                self._got = self._src.agg(*self._metrics).first().asDict()
+        return self._got
 
 
 def count_pass(frame: DataFrame, *observed: Observed) -> dict:
     """Run ``frame`` into Spark's no-op sink: one job, with no shuffle,
     that fills ``observed`` (built into ``frame``'s plan) without writing
     anything; ``count()`` runs two under adaptive execution. The
-    statement-time pass of a write that is not published now (inside a
-    transaction, or before RETURNING pins its rows)."""
+    statement-time pass of a write that is staged in a transaction
+    instead of written now."""
     frame.write.format("noop").mode("overwrite").save()
-    return _metrics(observed)
+    return metrics(*observed)
 
 
 def pin(frame: DataFrame) -> DataFrame:
     """Materialise ``frame`` now (one job) into blocks only the returned
-    frame reads. RETURNING rows are a lazy plan over files a swap is about
-    to delete, so they are pinned first. Not ``cache()``: the
-    CacheManager matches a later scan of the same table directory to the
-    cached rows, and a swap is a rename Spark never sees, so the next
-    identical statement would be served the old rows."""
+    frame reads: RETURNING rows, cursor results and statement snapshots,
+    which are lazy plans over files a later swap deletes. Not
+    ``cache()``: the CacheManager matches a later scan of the same table
+    directory to the cached rows, and a swap is a rename Spark never
+    sees, so the next identical statement would be served the old
+    rows."""
     return frame.localCheckpoint(eager=True)
 
 
-def _metrics(observed) -> dict:
+def metrics(*observed: Observed) -> dict:
+    """The metrics of ``observed``, merged, as the action that ran them
+    took them."""
     return {k: v for o in observed for k, v in o.get().items()}
 
 
@@ -338,11 +346,7 @@ class ManagedTable:
                 writer = writer.partitionBy(*self.partition_cols)
             writer.parquet(self.path)
             self._rebind(rows.schema if current else None)
-        return self.df_of(rows) if returning else seen.get()["inserted"]
-
-    @staticmethod
-    def df_of(rows: DataFrame) -> DataFrame:
-        return rows
+        return rows if returning else seen.get()["inserted"]
 
     def stage(self, new_df: DataFrame, *observed: Observed) -> dict:
         """Phase 1 of a swap: materialise ``new_df`` beside the table and
@@ -365,7 +369,7 @@ class ManagedTable:
         writer.parquet(tmp)
         self._staged = tmp
         self._staged_schema = new_df.schema
-        return _metrics(observed)
+        return metrics(*observed)
 
     def commit_staged(self) -> None:
         """Phase 2: swap the staged directory in (two renames + cleanup).
@@ -385,59 +389,33 @@ class ManagedTable:
         the staged write observed; if it raises, the staged directory is
         deleted and the table is untouched. Returns the metrics."""
         with table_write_lock(self.path):
-            metrics = self.stage(new_df, *observed)
+            m = self.stage(new_df, *observed)
             if verify is not None:
                 try:
-                    verify(metrics)
+                    verify(m)
                 except BaseException:
                     shutil.rmtree(self._staged, ignore_errors=True)
                     self._staged = self._staged_schema = None
                     raise
             self.commit_staged()
-        return metrics
+        return m
 
     def update(
-        self,
-        cond: Column,
-        set_exprs: dict[str, Column],
-        returning: bool = False,
-        validator=None,
-        transform=None,
+        self, cond: Column, set_exprs: dict[str, Column], returning: bool = False
     ) -> DataFrame | int:
         """UPDATE ... SET ... WHERE cond [RETURNING *].
 
         The reference evaluates a SET expression tree over matched rows
         (`update_expression.hpp:17-39`). PG semantics: the WHERE predicate
-        AND every SET expression are evaluated against the OLD row — so the
-        match is materialised once on the pre-update frame and every
-        assignment projects in a single ``select`` (chained ``withColumn``
-        would leak already-updated values into later SET exprs and re-run
-        the WHERE against updated columns). One distributed projection, no
-        shuffle.
+        AND every SET expression are evaluated against the OLD row (see
+        :func:`flag_update`). One distributed projection, no shuffle.
         """
         # the table's name qualifies the target row, so a correlated
         # subquery in WHERE can reference it (``t.id``)
-        flagged = flag_update(self.df().alias(self.name), cond, set_exprs)
-        seen = Observed(flagged, updated=F.count_if(F.col("_matched")))
-        new_df = seen.df.drop("_matched")
-        matched = flagged.filter(F.col("_matched")).drop("_matched")
-        if transform is not None:
-            # post-SET projection hook (stored generated columns): runs
-            # before validation so constraints see the final row values
-            new_df, matched = transform(new_df, matched)
-        # constraint hook: raises before any state is swapped in, so a
-        # violating UPDATE leaves the table untouched (reference
-        # autocommit-abort semantics, test_correctness_bugs.cpp:430)
-        def verify(_metrics):
-            if validator is not None:
-                validator(matched, new_df)
-
-        if returning:
-            verify(None)
-            result = pin(matched)
-            self._swap_in(new_df)
-            return result
-        return self._swap_in(new_df, seen, verify=verify)["updated"]
+        return self._rewrite(
+            flag_update(self.df().alias(self.name), cond, set_exprs),
+            returning,
+        )
 
     # -- ALTER TABLE (reference operator_alter_column_*.cpp) ----------------
     def add_column(self, col_name: str, dtype: str, default: Column | None = None) -> None:
@@ -485,32 +463,28 @@ class ManagedTable:
 
         SQL three-valued logic: only rows where ``cond`` is TRUE are
         deleted — a NULL predicate (e.g. ``x > 5`` with NULL x) KEEPS the
-        row, so the survivor filter is ``NOT coalesce(cond, false)``, never
-        ``~cond`` (which would silently drop NULL-predicate rows).
+        row (:func:`flag_update` flags ``coalesce(cond, false)``).
         """
+        return self._rewrite(
+            flag_update(self.df().alias(self.name), cond, {}), returning,
+            delete=True,
+        )
+
+    def _rewrite(
+        self, flagged: DataFrame, returning: bool, delete: bool = False
+    ) -> DataFrame | int:
+        """Swap in the rows of a :func:`flag_update` frame: the affected
+        rows (pinned first) with ``returning``, else their count, which
+        the write observes."""
+        new_df, affected, seen = flagged_write(flagged, delete)
         if returning:
-            new_df, matched = apply_delete(self.df().alias(self.name), cond)
-            result = pin(matched)
-            self._swap_in(new_df)
-            return result
-        # deleted = rows before - rows after, both taken by the write
-        before = Observed(self.df().alias(self.name), rows=F.count(F.lit(1)))
-        after = Observed(apply_delete(before.df, cond)[0], kept=F.count(F.lit(1)))
-        m = self._swap_in(after.df, before, after)
-        return m["rows"] - m["kept"]
+            rows = pin(affected)
+            self._swap_in(new_df, seen)
+            return rows
+        return self._swap_in(new_df, seen)["n"]
 
 
-# -- pure-frame DML (shared by ManagedTable and transaction staging) ---------
-
-
-def apply_update(
-    df: DataFrame, cond: Column, set_exprs: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """PG-semantics UPDATE as a pure transformation: returns
-    (updated_frame, matched_rows_post_update)."""
-    flagged = flag_update(df, cond, set_exprs)
-    matched = flagged.filter(F.col("_matched")).drop("_matched")
-    return flagged.drop("_matched"), matched
+# -- pure-frame DML (shared by ManagedTable and the catalog) -----------------
 
 
 def flag_update(
@@ -518,11 +492,14 @@ def flag_update(
 ) -> DataFrame:
     """The updated frame with a boolean ``_matched`` column marking the
     rows the UPDATE changed. WHERE and all SET expressions evaluate against
-    the OLD row (single-select projection)."""
+    the OLD row (single-select projection). With no SET expressions (a
+    DELETE) it is ``df`` plus the flag."""
+    current = df.withColumn("_matched", F.coalesce(cond, F.lit(False)))
+    if not set_exprs:
+        return current
     unknown = [c for c in set_exprs if c not in df.columns]
     if unknown:
         raise ValueError(f"UPDATE SET targets not in table schema: {unknown}")
-    current = df.withColumn("_matched", F.coalesce(cond, F.lit(False)))
     # each SET value is cast to its column's type (PG assignment
     # coercion): `v + 1.5` on a decimal(12,2) column must not widen it
     updated = current.select(
@@ -542,11 +519,18 @@ def flag_update(
     return updated
 
 
-def apply_delete(df: DataFrame, cond: Column) -> tuple[DataFrame, DataFrame]:
-    """Three-valued-logic DELETE as a pure transformation: returns
-    (surviving_frame, deleted_rows). NULL predicates keep the row."""
-    matched = F.coalesce(cond, F.lit(False))
-    return df.filter(~matched), df.filter(matched)
+def flagged_write(
+    flagged: DataFrame, delete: bool = False
+) -> tuple[DataFrame, DataFrame, Observed]:
+    """Split a :func:`flag_update` frame into (new rows, affected rows,
+    :class:`Observed` ``n``, the affected-row count). The affected rows
+    are the ``_matched`` ones; a DELETE leaves them out of the new rows.
+    Both frames carry the observation, so whichever action runs first,
+    the write or a RETURNING pin, takes the count."""
+    seen = Observed(flagged, n=F.count_if(F.col("_matched")))
+    hit = F.col("_matched")
+    new_df = (seen.df.filter(~hit) if delete else seen.df).drop("_matched")
+    return new_df, seen.df.filter(hit).drop("_matched"), seen
 
 
 # -- constraints (distributed validation joins) ------------------------------

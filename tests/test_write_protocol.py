@@ -254,37 +254,260 @@ def test_zero_row_status_fetch_runs_no_job(spark, eng):
 
 
 @pytest.mark.parametrize(
-    "sql, ceiling",
+    "pre, sql, ceiling",
     [
-        ("INSERT INTO t VALUES (7, 70)", 1),
-        ("DELETE FROM t WHERE k = 7", 1),
-        ("UPDATE t SET v = s.v FROM s WHERE t.k = s.k", 2),
+        (None, "INSERT INTO t VALUES (7, 70)", 1),
+        (None, "DELETE FROM t WHERE k = 7", 1),
+        (None, "UPDATE t SET v = s.v FROM s WHERE t.k = s.k", 2),
         (
+            None,
             "MERGE INTO t USING s ON t.k = s.k "
             "WHEN MATCHED THEN UPDATE SET v = t.v + s.v",
             2,
         ),
         (
+            "DELETE FROM t WHERE k = 9",
             "MERGE INTO t USING s ON t.k = s.k "
             "WHEN MATCHED THEN UPDATE SET v = t.v + s.v "
             "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v)",
-            3,
+            1,
+        ),
+        (None, "UPDATE t SET v = v + 1 WHERE k = 1 RETURNING v", 3),
+        ("INSERT INTO t VALUES (8, 80)", "DELETE FROM t WHERE k = 8 RETURNING v", 3),
+        (None, "INSERT INTO t VALUES (7, 70) RETURNING v", 1),
+        (None, "UPDATE t SET v = s.v FROM s WHERE t.k = s.k RETURNING v", 5),
+        (
+            "INSERT INTO t VALUES (2, 21)",
+            "DELETE FROM t USING s WHERE t.k = s.k AND s.k = 2 RETURNING t.v",
+            5,
+        ),
+        ("BEGIN", "UPDATE t SET v = v + 1 WHERE k = 1", 1),
+        ("BEGIN", "INSERT INTO t VALUES (7, 70)", 1),
+        ("BEGIN", "UPDATE t SET v = s.v FROM s WHERE t.k = s.k", 2),
+        (None, "EXPLAIN UPDATE t SET v = v + 1 WHERE k = 1", 1),
+        (None, "EXPLAIN UPDATE t SET v = s.v FROM s WHERE t.k = s.k", 1),
+        (None, "EXPLAIN DELETE FROM t USING s WHERE t.k = s.k", 1),
+        (
+            None,
+            "EXPLAIN MERGE INTO t USING s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = t.v + s.v",
+            1,
         ),
     ],
-    ids=["insert", "delete", "update-from", "merge", "merge-insert"],
+    ids=[
+        "insert", "delete", "update-from", "merge", "merge-insert",
+        "update-returning", "delete-returning", "insert-returning",
+        "update-from-returning", "delete-using-returning",
+        "update-txn", "insert-txn", "update-from-txn",
+        "explain-update", "explain-update-from", "explain-delete-using",
+        "explain-merge",
+    ],
 )
-def test_write_job_ceiling(spark, eng, sql, ceiling):
+def test_write_job_ceiling(spark, eng, pre, sql, ceiling):
     """On an unconstrained table a write runs one action, the staged
     write: one job, plus one broadcast job per join side Spark broadcasts
-    (the source for the LEFT join; the target too for a NOT MATCHED
-    clause's anti-join). Fetching its status runs nothing."""
+    (the source, for the LEFT join of UPDATE…FROM and a matched-only
+    MERGE; a MERGE that inserts joins FULL OUTER, which over one-partition
+    tables needs no exchange and no broadcast). Fetching its status runs
+    nothing. RETURNING adds the pin of its rows and their fetch; inside a
+    transaction one pass takes the count and nothing is written; plain
+    EXPLAIN runs no pass and no check, only the fetch of its plan text.
+    ``pre`` runs before each run (``BEGIN``: each run is rolled back)."""
     for stmt in _SETUP:
         eng.execute_sql(stmt)
-    eng.execute_sql(sql).fetchall()  # warm: the table's scan is cached
-    if sql.startswith("MERGE"):
-        eng.execute_sql("DELETE FROM t WHERE k = 9")
-    _, n = _jobs(spark, lambda: eng.execute_sql(sql).fetchall())
+    for _ in range(2):  # warm (the table's scan is cached), then measure
+        if pre:
+            eng.execute_sql(pre)
+        _, n = _jobs(spark, lambda: eng.execute_sql(sql).fetchall())
+        if pre == "BEGIN":
+            eng.execute_sql("ROLLBACK")
     assert 1 <= n <= ceiling
+    if sql.startswith("EXPLAIN"):
+        assert _rows(eng, "t") == [(1, 10), (2, 20), (3, 30), (4, 40)]
+
+
+# -- RETURNING resolves before anything is written -------------------------
+
+_RETURNING = (
+    "INSERT INTO t VALUES (5, 50) RETURNING {}",
+    "UPDATE t SET v = v + 1 WHERE k = 1 RETURNING {}",
+    "DELETE FROM t WHERE k = 1 RETURNING {}",
+    "UPDATE t SET v = s.v FROM s WHERE t.k = s.k RETURNING {}",
+    "DELETE FROM t USING s WHERE t.k = s.k RETURNING {}",
+)
+_RETURNING_IDS = ["insert", "update", "delete", "update-from", "delete-using"]
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+@pytest.mark.parametrize("sql", _RETURNING, ids=_RETURNING_IDS)
+def test_returning_qualified_by_target_name(both, sql, txn):
+    """RETURNING may qualify a column by the target table's name, as in
+    PG; rows and table match DuckDB's."""
+    eng, con = both
+    sql = sql.format("t.k, t.v")
+    if txn:
+        eng.execute_sql("BEGIN")
+    got = eng.execute_sql(sql).fetchall()
+    if txn:
+        eng.execute_sql("COMMIT")
+    want = con.execute(sql).fetchall()
+    assert sorted(map(tuple, got)) == sorted(want)
+    assert _rows(eng, "t") == _rows(con, "t")
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+def test_returning_qualified_by_target_alias(both, txn):
+    eng, con = both
+    sql = "DELETE FROM t AS x USING s WHERE x.k = s.k AND s.v > 0 RETURNING x.k"
+    got = eng.execute_sql(f"BEGIN; {sql}" if txn else sql).fetchall()
+    if txn:
+        eng.execute_sql("COMMIT")
+    assert sorted(map(tuple, got)) == sorted(con.execute(sql).fetchall())
+    assert _rows(eng, "t") == _rows(con, "t")
+
+
+def _upsert_tables(eng):
+    for stmt in (
+        "CREATE TABLE u (k int PRIMARY KEY, v int DEFAULT 99)",
+        "INSERT INTO u VALUES (1, 10), (2, 20)",
+        "CREATE TABLE us (k int, v int)",
+        "INSERT INTO us VALUES (1, 5), (2, 7)",
+    ):
+        eng.execute_sql(stmt)
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+@pytest.mark.parametrize(
+    "sql",
+    [*_RETURNING, "INSERT INTO u VALUES (1, 3) ON CONFLICT (k) DO UPDATE "
+     "SET v = EXCLUDED.v RETURNING {}"],
+    ids=[*_RETURNING_IDS, "on-conflict"],
+)
+def test_unknown_returning_column_writes_nothing(eng, sql, txn):
+    """A RETURNING list naming no column of the affected rows refuses the
+    statement before it writes: the table's files are as they were, and
+    inside a transaction the staged frame is too."""
+    from pyspark.errors import AnalysisException
+
+    for stmt in _SETUP:
+        eng.execute_sql(stmt)
+    _upsert_tables(eng)
+    name = "u" if "INTO u" in sql else "t"
+    paths = [eng.catalog.tables[n].path for n in ("t", "u")]
+    before = [_listing(p) for p in paths]
+    rows = _rows(eng, name)
+    if txn:
+        eng.execute_sql("BEGIN")
+        eng.execute_sql(f"UPDATE {name} SET v = 0 WHERE k = 2")
+        staged = eng.catalog._txn[name]
+        rows = _rows(eng, name)
+    with pytest.raises(AnalysisException, match="nosuch"):
+        eng.execute_sql(sql.format("nosuch"))
+    assert [_listing(p) for p in paths] == before
+    assert _rows(eng, name) == rows
+    if txn:
+        assert eng.catalog._txn[name] is staged
+        eng.execute_sql("ROLLBACK")
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+def test_on_conflict_returning_qualified_by_target_name(eng, txn):
+    con = duckdb.connect()
+    for stmt in (
+        "CREATE TABLE u (k int PRIMARY KEY, v int)",
+        "INSERT INTO u VALUES (1, 10), (2, 20)",
+    ):
+        eng.execute_sql(stmt)
+        con.execute(stmt)
+    sql = (
+        "INSERT INTO u VALUES (1, 3), (5, 50) ON CONFLICT (k) "
+        "DO UPDATE SET v = EXCLUDED.v RETURNING u.k, u.v"
+    )
+    got = eng.execute_sql(f"BEGIN; {sql}" if txn else sql).fetchall()
+    if txn:
+        eng.execute_sql("COMMIT")
+    assert sorted(map(tuple, got)) == sorted(con.execute(sql).fetchall())
+    assert _rows(eng, "u") == _rows(con, "u")
+    con.close()
+
+
+# -- INSERT ... ON CONFLICT builds its rows as INSERT does ------------------
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+def test_on_conflict_set_subquery_with_its_own_where(eng, txn):
+    """The statement's own DO UPDATE ... WHERE is found outside the SET
+    subquery's parentheses. PG upserts one row: key 1 takes the subquery's
+    7, key 2 fails the WHERE and keeps 20. (DuckDB refuses subqueries in
+    DO UPDATE SET, so the expected rows are PG's.)"""
+    _upsert_tables(eng)
+    sql = (
+        "INSERT INTO u VALUES (1, 0), (2, 0) ON CONFLICT (k) DO UPDATE "
+        "SET v = (SELECT max(v) FROM us WHERE us.k > 1) WHERE u.v < 15"
+    )
+    got = eng.execute_sql(f"BEGIN; {sql}" if txn else sql).fetchall()
+    if txn:
+        eng.execute_sql("COMMIT")
+    assert got == [(1,)]
+    assert _rows(eng, "u") == [(1, 7), (2, 20)]
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "INSERT INTO u VALUES (3) ON CONFLICT (k) DO NOTHING",
+        "INSERT INTO u VALUES (3)",
+    ],
+    ids=["on-conflict", "insert"],
+)
+def test_short_values_row_takes_defaults(eng, sql):
+    """A VALUES row shorter than the table fills the leading columns; the
+    rest take their DEFAULT, with or without ON CONFLICT. DuckDB needs the
+    column list spelled out for the same rows."""
+    con = duckdb.connect()
+    _upsert_tables(eng)
+    for stmt in (
+        "CREATE TABLE u (k int PRIMARY KEY, v int DEFAULT 99)",
+        "INSERT INTO u VALUES (1, 10), (2, 20)",
+    ):
+        con.execute(stmt)
+    assert eng.execute_sql(sql).fetchall() == [(1,)]
+    con.execute(sql.replace("INTO u VALUES", "INTO u (k) VALUES"))
+    assert _rows(eng, "u") == _rows(con, "u") == [(1, 10), (2, 20), (3, 99)]
+    con.close()
+
+
+# -- WHERE CURRENT OF ----------------------------------------------------
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+def test_where_current_of(both, txn):
+    """Positioned UPDATE and DELETE change the row under the cursor; a
+    second positioned UPDATE re-updates the post-update row. DuckDB runs
+    the same writes keyed by the row's ``k``."""
+    eng, con = both
+    hold = "" if txn else " WITH HOLD"
+    if txn:
+        eng.execute_sql("BEGIN")
+    eng.execute_sql(f"DECLARE c CURSOR{hold} FOR SELECT * FROM t ORDER BY k")
+    steps = [
+        ("UPDATE t SET v = v + 100 WHERE {}", "k = 1"),
+        ("DELETE FROM t WHERE {} RETURNING k, v", "k = 2"),
+        ("UPDATE t SET v = v * 2 WHERE {} RETURNING v", "k = 3"),
+        ("UPDATE t SET v = v * 2 WHERE {}", "k = 3"),
+    ]
+    fetched = None
+    for sql, key in steps:
+        if key != fetched:
+            eng.execute_sql("FETCH NEXT FROM c").fetchall()
+            fetched = key
+        got = eng.execute_sql(sql.format("CURRENT OF c")).fetchall()
+        want = con.execute(sql.format(key)).fetchall()
+        assert sorted(map(tuple, got)) == sorted(want), sql
+    eng.execute_sql("CLOSE c")
+    if txn:
+        eng.execute_sql("COMMIT")
+    assert _rows(eng, "t") == _rows(con, "t") == [(1, 110), (3, 120), (4, 40)]
 
 
 # -- self-referencing foreign keys ---------------------------------------
@@ -307,6 +530,27 @@ def test_delete_keeps_self_fk_set_null(eng, sql, txn):
     eng.execute_sql("INSERT INTO d VALUES (2)")
     eng.execute_sql(f"BEGIN; {sql}; COMMIT" if txn else sql)
     assert eng.execute_sql("SELECT * FROM r").fetchall() == [(3, None)]
+
+
+@pytest.mark.parametrize("txn", [False, True], ids=["autocommit", "txn"])
+def test_positioned_delete_keeps_self_fk_cascade(eng, txn):
+    """DELETE ... WHERE CURRENT OF applies a self-referencing FK's ON
+    DELETE CASCADE like a plain DELETE does."""
+    eng.execute_sql("CREATE TABLE r (id int, p int)")
+    eng.execute_sql("INSERT INTO r VALUES (1, NULL), (2, 1), (3, 2)")
+    eng.execute_sql(
+        "ALTER TABLE r ADD CONSTRAINT fk_p FOREIGN KEY (p) "
+        "REFERENCES r (id) ON DELETE CASCADE"
+    )
+    hold = "" if txn else " WITH HOLD"
+    eng.execute_sql(
+        ("BEGIN; " if txn else "")
+        + f"DECLARE c CURSOR{hold} FOR SELECT * FROM r ORDER BY id"
+    )
+    eng.execute_sql("FETCH 2 FROM c").fetchall()
+    assert eng.execute_sql("DELETE FROM r WHERE CURRENT OF c").fetchall() == [(1,)]
+    eng.execute_sql("CLOSE c" + ("; COMMIT" if txn else ""))
+    assert _rows(eng, "r") == [(1, None)]
 
 
 def test_multirow_insert_may_reference_its_own_rows(eng):
