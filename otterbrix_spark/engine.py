@@ -10,13 +10,21 @@ parameterised `spark.sql(query, args)`.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
-from otterbrix_spark.catalog import Catalog
+from otterbrix_spark.catalog import Catalog, _code_start
 from otterbrix_spark.cursor import Cursor
 from otterbrix_spark.dialect import rewrite
 from otterbrix_spark.session import configure_session, get_spark
 from otterbrix_spark.sources.registry import register_views
+
+# PG EXECUTE name [(args)]
+_EXECUTE = re.compile(
+    r"^\s*EXECUTE\s+([A-Za-z_]\w*)\s*(?:\((.*)\))?\s*;?\s*$",
+    re.IGNORECASE | re.DOTALL,
+)
 
 
 class Engine:
@@ -91,6 +99,9 @@ class Engine:
             for stmt in statements:
                 cur = self.execute_sql(stmt, *params)
             return cur
+        if statements:
+            # the statement as split: leading comments dropped
+            sql = statements[0]
         handled = self._prepared_statement(sql, params)
         if handled is not None:
             return handled
@@ -100,65 +111,46 @@ class Engine:
         body = self.catalog.rewrite_domain_casts(
             self.catalog.canonicalize(rewrite(sql))
         )
+        stmt = self.catalog.statement(body)
         if params:
-            if self.catalog.handles(body):
+            if stmt.routed:
                 # routed statements (DML/DDL on managed tables, SET ...) go
                 # through the Catalog, which has no parameter binder — inline
                 # the literals exactly as the reference's parameter_node_t
                 # folds constants into the plan
-                import re
-
-                body = re.sub(
+                return self._route(re.sub(
                     r"\$(\d+)",
                     lambda m: _sql_literal(params[int(m.group(1)) - 1]),
                     body,
-                )
-                return self._route(body)
-            import re
-
+                ))
             body = re.sub(r"\$(\d+)", lambda m: f":p{m.group(1)}", body)
             args = {f"p{i + 1}": v for i, v in enumerate(params)}
             return Cursor(self.spark.sql(body, args=args))
-        if self.catalog.handles(body):
-            return self._route(body)
+        if stmt.routed:
+            return self._route(body, stmt)
         return Cursor(self.spark.sql(body))
 
-    # statement heads that can never mutate catalog metadata or table
-    # state: cursor traffic and txn bookkeeping. Row-at-a-time cursor
-    # loops (FETCH + positioned DML per row) must not pay a JSON write +
-    # per-view re-analysis per FETCH (self-review r10).
-    _NON_MUTATING_HEADS = (
-        "FETCH", "MOVE", "CLOSE", "DECLARE", "BEGIN", "SAVEPOINT",
-        "RELEASE", "SELECT", "EXPLAIN", "SET TIME", "SHOW",
-    )
+    def _route(self, body: str, stmt=None) -> Cursor:
+        """Route through the catalog, then, when the statement's row
+        ``mutates``, persist the catalog dicts and re-register
+        late-binding views — the statement boundary where every
+        DDL/sequence mutation is already applied (reference persistence:
+        a reopened engine over the same table_dir sees tables,
+        constraints, sequences, types and views; `test_persistence.cpp`).
+        Cursor traffic and transaction bookkeeping skip both: row-at-a-time
+        cursor loops (FETCH + positioned DML per row) must not pay a JSON
+        write + per-view re-analysis per FETCH (self-review r10). A
+        statement consuming a sequence mutates whatever its head.
 
-    def _route(self, body: str) -> Cursor:
-        """Route through the catalog, then persist the catalog dicts and
-        re-register late-binding views — the statement boundary where
-        every DDL/sequence mutation is already applied (reference
-        persistence: a reopened engine over the same table_dir sees
-        tables, constraints, sequences, types and views;
-        `test_persistence.cpp`). Non-mutating statements skip both.
-
-        Two boundary subtleties (ADVICE r10): a routed ``SELECT
-        nextval('s')`` mutates sequence state despite its SELECT head, so
-        sequence-consuming statements always persist; and while an
-        explicit transaction is open, persistence is DEFERRED to the
-        COMMIT/ROLLBACK boundary — an eager per-statement write would
+        While an explicit transaction is open, persistence is DEFERRED to
+        the COMMIT/ROLLBACK boundary — an eager per-statement write would
         leave in-txn DDL visible to a reopened engine after a pre-COMMIT
         crash, contradicting transactional-DDL rollback. View refresh
         still runs per in-txn statement (read-your-writes through views
         reads the staged temp views)."""
-        import re
-
-        cur = Cursor(self.catalog.route(body))
-        head = body.lstrip()[:9].upper()
-        mutating = not head.startswith(self._NON_MUTATING_HEADS)
-        if not mutating and re.search(
-            r"\bnextval\s*\(", body, re.IGNORECASE
-        ):
-            mutating = True
-        if mutating:
+        stmt = stmt or self.catalog.classify(body)
+        cur = Cursor(self.catalog.route(stmt.sql, stmt))
+        if stmt.kind.mutates:
             if self.catalog._txn is None:
                 # ON COMMIT DELETE ROWS under autocommit: the statement's
                 # implicit commit empties any delete-mode temp table the
@@ -168,14 +160,14 @@ class Engine:
                     m == "delete"
                     for m in self.catalog.temp_tables.values()
                 ):
-                    self.catalog.implicit_commit_temp_sweep(body)
+                    self.catalog.implicit_commit_temp_sweep(stmt.sql)
                 self.catalog.persist_catalog_state()
-            if head.startswith(("COMMIT", "ROLLBACK", "ABORT")):
+            if stmt.kind.refresh_all:
                 # staged frames were swapped out / discarded — every view
                 # bound to them during the txn must re-bind to disk state
                 self.catalog.refresh_views()
             else:
-                self.catalog.refresh_views(statement=body)
+                self.catalog.refresh_views(statement=stmt.sql)
         return cur
 
     def sql(self, sql: str, *params) -> DataFrame:
@@ -200,8 +192,6 @@ class Engine:
         routed CTAS / CREATE MATERIALIZED VIEW plans its source query
         without creating the table; other routed utility statements
         (TRUNCATE, ALTER, SET, ...) refuse, as PG's grammar does."""
-        import re
-
         m = re.match(
             r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.+)$", sql,
             re.IGNORECASE | re.DOTALL,
@@ -235,22 +225,16 @@ class Engine:
         commands eagerly on ``spark.sql``, so the only plan-without-write
         path there is Spark's own EXPLAIN statement).
 
-        Routing: ``EXECUTE name(args)`` binds the prepared text first
-        (PG's EXPLAIN EXECUTE); catalog-routed DML on managed tables goes
-        through ``Catalog.explain_route`` (staged in a discarded implicit
-        transaction, sequence state restored); a SELECT carrying
-        nextval()/currval() plans with a NON-CONSUMING peek substitution
-        (PG never evaluates nextval under plain EXPLAIN); CTAS-family
-        statements plan their source SELECT; every other catalog-routed
-        statement is a utility statement PG's EXPLAIN grammar refuses —
-        raising is strictly better than the old behaviour, which eagerly
-        EXECUTED it."""
-        import re
-
-        mex = re.match(
-            r"^\s*EXECUTE\s+([A-Za-z_]\w*)\s*(?:\((.*)\))?\s*;?\s*$",
-            sql, re.IGNORECASE | re.DOTALL,
-        )
+        ``EXECUTE name(args)`` binds the prepared text first (PG's
+        EXPLAIN EXECUTE). Everything else goes by the explain mode of the
+        statement's row in the catalog's statement table: writes on
+        managed tables go through ``Catalog.explain_route`` (staged in a
+        discarded implicit transaction, sequence state restored);
+        nextval()/currval() calls are peeked WITHOUT consuming (PG never
+        evaluates nextval under plain EXPLAIN); CTAS-family statements
+        plan their source query; utility statements, which PG's EXPLAIN
+        grammar refuses, raise rather than execute."""
+        mex = _EXECUTE.match(sql)
         if mex:
             bound = self._bind_prepared(
                 mex.group(1).lower(), mex.group(2), params
@@ -265,82 +249,36 @@ class Engine:
                 lambda mm: _sql_literal(params[int(mm.group(1)) - 1]),
                 body,
             )
-        if not self.catalog.handles(body):
-            # classify by the first CODE token: a leading comment must not
-            # make a SELECT look like a utility statement (self-review r9)
-            probe = body
-            while True:
-                probe = probe.lstrip()
-                if probe.startswith("--"):
-                    probe = probe.split("\n", 1)[1] if "\n" in probe else ""
-                elif probe.startswith("/*") and "*/" in probe:
-                    probe = probe.split("*/", 1)[1]
-                else:
-                    break
-            if probe.lstrip().upper().startswith(
-                ("SELECT", "WITH", "VALUES", "(", "TABLE ")
-            ):
-                return Cursor(self.spark.sql(body)), False
-            # anything else Spark would run EAGERLY on spark.sql (SET k=v,
-            # CACHE TABLE, ANALYZE TABLE, DROP NAMESPACE, ...) — commands,
-            # not queries. Refuse like the routed-utility branch below:
-            # plain EXPLAIN must never execute (ADVICE r8).
-            raise ValueError(
-                "EXPLAIN cannot plan a utility statement without "
-                "executing it (PG accepts only SELECT/VALUES/DML/CTAS "
-                "under EXPLAIN); use EXPLAIN ANALYZE to execute and "
-                "profile it"
-            )
-        head = body.lstrip().upper()
-        from otterbrix_spark.catalog import _parse_with_dml
-
-        if head.startswith("WITH") and _parse_with_dml(body):
-            # data-modifying CTEs: the discarded-txn probe stages every
-            # sub-statement lazily (zero jobs) and plans the main query
-            # over the staged snapshot
+        stmt = self.catalog.statement(body)
+        mode = stmt.kind.explain
+        if mode == "seq":
+            # PG plans nextval()/currval() without evaluating them: peek
+            # the current values, then explain by the statement's own row
+            peeked = self.catalog._peek_sequences(body, strict=True)
+            inner = self.catalog.classify(peeked)
+            mode = inner.kind.explain
+            if mode in ("query", "ctas"):
+                body, stmt = peeked, inner
+        if mode == "query":
+            return Cursor(self.spark.sql(body)), False
+        if mode == "probe":
+            # the discarded-txn probe stages the write lazily (data-
+            # modifying CTEs: every sub-statement) and plans its result
             return Cursor(self.catalog.explain_route(body)), False
-        if head.startswith(("INSERT", "UPDATE", "DELETE", "MERGE")):
-            target = re.match(
-                r"^\s*(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO)"
-                r"\s+([\w.]+)",
-                body, re.IGNORECASE,
-            )
-            name = target.group(1) if target else ""
-            if name in self.catalog.tables or name in self.catalog.dynamic:
-                # dynamic tables stage per-txn batches too (round 8), so
-                # the discarded-txn probe protects both kinds of table
-                return Cursor(self.catalog.explain_route(body)), False
-            # not a managed table: route() would fall through to
-            # spark.sql, which EXECUTES DML commands eagerly — delegate
-            # to Spark's own EXPLAIN, the plan-only path for native tables
+        if mode == "native":
+            # DML on a table the catalog does not manage: route() would
+            # hand it to spark.sql, which EXECUTES DML commands eagerly —
+            # Spark's own EXPLAIN is the plan-only path there
             return (
-                Cursor(self.spark.sql("EXPLAIN FORMATTED " + body)),
+                Cursor(self.spark.sql("EXPLAIN FORMATTED " + stmt.sql)),
                 True,
             )
-        if head.startswith(("SELECT", "WITH", "VALUES", "(")):
-            # handles() fired on nextval()/currval() in a query position:
-            # peek the current values WITHOUT consuming (PG plans the call,
-            # it does not evaluate it under plain EXPLAIN)
-            def _peek(mm: re.Match) -> str:
-                seq = mm.group(1).replace(".", "__")
-                if seq not in self.catalog.sequences:
-                    # PG errors at plan time for an unknown sequence too
-                    raise ValueError(f"unknown sequence: {seq}")
-                return str(self.catalog.sequences[seq])
-
-            peeked = re.sub(
-                r"\b(?:nextval|currval)\s*\(\s*'([\w.]+)'\s*\)",
-                _peek, body, flags=re.IGNORECASE,
-            )
-            return Cursor(self.spark.sql(peeked)), False
-        m = re.match(
-            r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:MATERIALIZED\s+)?"
-            r"(?:TABLE|VIEW)\s+[\w.]+\s+AS\s+(.+)$",
-            body,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            return self._explain_only(m.group(1).strip(), ())
+        if mode == "ctas":
+            source = stmt.kind.source(stmt.match)
+            if source is not None:
+                return self._explain_only(source.strip(), ())
+        # anything else executes (routed utility statements, and the
+        # commands spark.sql runs eagerly: SET k=v, CACHE TABLE, ...)
         raise ValueError(
             "EXPLAIN cannot plan a utility statement without executing it "
             "(PG accepts only SELECT/VALUES/DML/CTAS under EXPLAIN); "
@@ -359,8 +297,6 @@ class Engine:
         folding) and runs the stored text through the normal path, so
         prepared DML, DDL and SELECT all work; re-PREPARE of a live name
         errors as in PG; DEALLOCATE [ALL] drops."""
-        import re
-
         m = re.match(
             r"^\s*PREPARE\s+([A-Za-z_]\w*)\s*(?:\(([^)]*)\))?\s+AS\s+(.+)$",
             sql,
@@ -376,11 +312,7 @@ class Engine:
             return Cursor(
                 self.spark.sql(f"SELECT '{name}' AS prepared LIMIT 0")
             )
-        m = re.match(
-            r"^\s*EXECUTE\s+([A-Za-z_]\w*)\s*(?:\((.*)\))?\s*;?\s*$",
-            sql,
-            re.IGNORECASE | re.DOTALL,
-        )
+        m = _EXECUTE.match(sql)
         if m:
             body = self._bind_prepared(m.group(1).lower(), m.group(2), params)
             return self.execute_sql(body, *params)
@@ -407,8 +339,6 @@ class Engine:
         list — checked even for the ZERO-argument ``EXECUTE name`` form
         (unless the engine-level ``*params`` will bind them downstream,
         the supported pass-through combination)."""
-        import re
-
         if name not in self._prepared:
             raise ValueError(f'prepared statement "{name}" does not exist')
         body = self._prepared[name]
@@ -477,16 +407,6 @@ def _sql_literal(value) -> str:
     return "'" + str(value).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def _only_comments(stmt: str) -> bool:
-    """True when a segment contains nothing but comments/whitespace (e.g.
-    a trailing `/* ... */` after the final ';') — not a statement."""
-    import re
-
-    stripped = re.sub(r"--[^\n]*", "", stmt)
-    stripped = re.sub(r"/\*.*?\*/", "", stripped, flags=re.DOTALL)
-    return not stripped.strip()
-
-
 def _split_statements(sql: str) -> list[str]:
     """Split a batch on top-level semicolons — string-literal AND
     comment-aware: a ';' inside '...', a `--` line comment, or a `/* */`
@@ -494,15 +414,13 @@ def _split_statements(sql: str) -> list[str]:
     preserved verbatim; Spark's parser accepts both forms). Comments before
     a statement's first token are dropped, so the catalog's statement
     patterns see its head; comment-only segments are dropped."""
-    import re as _re
-
     out: list[str] = []
     cur = ""
     i, n = 0, len(sql)
     while i < n:
         ch = sql[i]
         if ch == "$":  # PG dollar-quoted string: $tag$ ... $tag$
-            m = _re.match(r"\$[A-Za-z_]\w*\$|\$\$", sql[i:])
+            m = re.match(r"\$[A-Za-z_]\w*\$|\$\$", sql[i:])
             if m:
                 tag = m.group(0)
                 j = sql.find(tag, i + len(tag))
@@ -535,14 +453,14 @@ def _split_statements(sql: str) -> list[str]:
             i = j
             continue
         if ch == ";":
-            if cur.strip() and not _only_comments(cur):
+            if _code_start(cur):
                 out.append(cur.strip())
             cur = ""
             i += 1
             continue
         cur += ch
         i += 1
-    if cur.strip() and not _only_comments(cur):
+    if _code_start(cur):
         out.append(cur.strip())
     return out
 

@@ -413,7 +413,7 @@ class ManagedTable:
         # the table's name qualifies the target row, so a correlated
         # subquery in WHERE can reference it (``t.id``)
         return self._rewrite(
-            flag_update(self.df().alias(self.name), cond, set_exprs),
+            flag_update(self.df().alias(self.name), cond, set_exprs, self.name),
             returning,
         )
 
@@ -487,19 +487,36 @@ class ManagedTable:
 # -- pure-frame DML (shared by ManagedTable and the catalog) -----------------
 
 
+def schema_names(names, columns: list[str], relation: str) -> list[str]:
+    """A statement's column ``names`` in ``relation``'s spelling: an
+    unquoted name folds as PG folds it (to lower case), so it matches its
+    column whatever its case; an unknown name raises PG's error."""
+    by_lower = {c.lower(): c for c in columns}
+    out = []
+    for n in names:
+        col = n if n in columns else by_lower.get(n.lower())
+        if col is None:
+            raise ValueError(
+                f'column "{n}" of relation "{relation}" does not exist'
+            )
+        out.append(col)
+    return out
+
+
 def flag_update(
-    df: DataFrame, cond: Column, set_exprs: dict[str, Column]
+    df: DataFrame, cond: Column, set_exprs: dict[str, Column],
+    relation: str = "",
 ) -> DataFrame:
     """The updated frame with a boolean ``_matched`` column marking the
-    rows the UPDATE changed. WHERE and all SET expressions evaluate against
-    the OLD row (single-select projection). With no SET expressions (a
-    DELETE) it is ``df`` plus the flag."""
+    rows the UPDATE of ``relation`` changed. WHERE and all SET expressions
+    evaluate against the OLD row (single-select projection). With no SET
+    expressions (a DELETE) it is ``df`` plus the flag."""
     current = df.withColumn("_matched", F.coalesce(cond, F.lit(False)))
     if not set_exprs:
         return current
-    unknown = [c for c in set_exprs if c not in df.columns]
-    if unknown:
-        raise ValueError(f"UPDATE SET targets not in table schema: {unknown}")
+    set_exprs = dict(zip(
+        schema_names(set_exprs, df.columns, relation), set_exprs.values()
+    ))
     # each SET value is cast to its column's type (PG assignment
     # coercion): `v + 1.5` on a decimal(12,2) column must not widen it
     updated = current.select(

@@ -78,6 +78,17 @@ class DynamicTable:
             n = len(self._batch_dirs())
             batch.write.parquet(os.path.join(self.path, f"batch-{n:06d}"))
 
+    def truncate(self) -> None:
+        """Remove every batch: the table stays, with no rows and no
+        columns (TRUNCATE, ON COMMIT DELETE ROWS)."""
+        import shutil
+
+        from otterbrix_spark.operators.dml import table_write_lock
+
+        with table_write_lock(self.path):
+            for d in self._batch_dirs():
+                shutil.rmtree(d)
+
     def _sources(self, extra: "tuple | list" = ()) -> list[DataFrame]:
         """Written batch frames plus any STAGED (uncommitted) batches —
         the transactional read-your-writes seam: a txn's pending inserts
